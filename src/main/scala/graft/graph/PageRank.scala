@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Integer PageRank (Brin & Page 1998) over an undirected edge list —
@@ -80,17 +80,23 @@ object PageRank {
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .join(deg, Seq("a"))
         .select(col("b").as("node"),
-          ((col("rank") - pmod(col("rank"), col("deg"))) / col("deg"))
-            .cast("long").as("c"))
+          floorDiv(col("rank"), col("deg")).as("c"))
       val sums = contrib.groupBy(col("node")).agg(sum(col("c")).as("s"))
       val scaled = coalesce(col("s"), lit(0L)) * dampingMicro
       r = nodes.join(sums, Seq("node"), "left")
         .select(col("node"),
-          (base + ((scaled - pmod(scaled, lit(1000000L))) / 1000000L).cast("long"))
-            .as("rank"))
+          (base + floorDiv(scaled, lit(1000000L))).as("rank"))
         .localCheckpoint(true)
       it += 1
     }
     r
   }
+
+  /** ⌊num / den⌋ in exact Long arithmetic (the pmod discipline + integral
+    * `div`). Spark's `/` divides in Double, which drops the last unit of a
+    * quotient once the dividend passes 2^53 (e.g. a ~1e11 quotient over a
+    * ~5e5 hub degree), so the distributed rounds would drift from the
+    * driver route's exact `Long` division. */
+  private[graft] def floorDiv(num: Column, den: Column): Column =
+    call_function("div", num - pmod(num, den), den)
 }

@@ -59,6 +59,13 @@ object TileScan {
     * via `mapPartitions`. Planning is metadata-only (reference R5): no
     * pixel IO happens until an action runs.
     *
+    * The driver ships only the planned assets (non-null `url`); each
+    * asset is expanded into its overlapping chunks by [[pairsOf]] inside
+    * the scan's tasks, so the plan holds one row per asset, not one per
+    * pair. The partition count comes from the closed-form pair count, so
+    * partitioning and chunk placement equal those of the driver-side
+    * [[workList]].
+    *
     * `readerFor` is evaluated lazily once per asset per task; Spark's
     * process-per-task model replaces the reference's thread-local GDAL
     * dataset machinery (`rio_reader.py:124-265`).
@@ -85,10 +92,15 @@ object TileScan {
       applyRescale: Boolean): Dataset[Tile] = {
     import spark.implicits._
 
-    val pairs = workList(assets, spec, chunkY, chunkX)
+    val planned = assets.filter(_.url != null)
+    val nPairs = planned.iterator.map { a =>
+      val (_, ys, xs) = overlap(a, spec, chunkY, chunkX)
+      ys.size.toLong * xs.size
+    }.sum
 
-    val nPart = math.max(1, math.min(pairs.size, spark.sparkContext.defaultParallelism * 2))
-    spark.createDataset(pairs)
+    val nPart = math.max(1L, math.min(nPairs, spark.sparkContext.defaultParallelism * 2L)).toInt
+    spark.createDataset(planned)
+      .flatMap(a => pairsOf(a, spec, chunkY, chunkX))
       .repartition(nPart, $"_2", $"_3") // co-locate by (yChunk, xChunk) for downstream per-chunk aggs
       .mapPartitions { it =>
         // Per-task reader cache: each URL opened at most once per task
@@ -124,29 +136,40 @@ object TileScan {
   /** Metadata-only (asset × chunk) work-list, driver side (like prepare:
     * reference scale is 1e2..1e5 assets — tiny vs the pixel data). Only
     * overlapping pairs are kept (chunk-granular IO elision, reference R3
-    * `to_dask.py:183-189`). The overlapping chunk index range is computed
-    * directly from each asset window — O(assets × overlap), not
-    * O(assets × total-chunks): a 1e6-asset plan over a 1e5-chunk grid stays
-    * a driver-side metadata pass, never 1e11 intersection tests.
+    * `to_dask.py:183-189`). The work-list is enumerated per asset by
+    * [[pairsOf]] — O(assets × overlap), not O(assets × total-chunks): a
+    * 1e6-asset plan over a 1e5-chunk grid stays a driver-side metadata
+    * pass, never 1e11 intersection tests. [[scan]] runs the same
+    * enumeration inside its tasks, and the v2 source plans its reads and
+    * answers pushed aggregates from this list.
     */
   def workList(assets: Seq[AssetRow], spec: RasterSpec,
                chunk: Int): Seq[(AssetRow, Int, Int, Window)] =
     workList(assets, spec, chunk, chunk)
 
   def workList(assets: Seq[AssetRow], spec: RasterSpec,
-               chunkY: Int, chunkX: Int): Seq[(AssetRow, Int, Int, Window)] = {
+               chunkY: Int, chunkX: Int): Seq[(AssetRow, Int, Int, Window)] =
+    assets.filter(_.url != null).flatMap(pairsOf(_, spec, chunkY, chunkX))
+
+  /** The (asset, yChunk, xChunk, read window) pairs of one asset, in
+    * row-major chunk order: the asset window clamped to the grid, cut at
+    * every chunk it overlaps. Empty when the asset misses the grid. */
+  def pairsOf(a: AssetRow, spec: RasterSpec,
+              chunkY: Int, chunkX: Int): Seq[(AssetRow, Int, Int, Window)] = {
+    val (win, ys, xs) = overlap(a, spec, chunkY, chunkX)
+    for (yc <- ys; xc <- xs)
+      yield (a, yc, xc, Window(xc * chunkX, yc * chunkY, chunkX, chunkY).intersect(win))
+  }
+
+  /** An asset's window clamped to the grid, and the row and column chunk
+    * index ranges it overlaps (both empty when it misses the grid). */
+  private def overlap(a: AssetRow, spec: RasterSpec,
+                      chunkY: Int, chunkX: Int): (Window, Range, Range) = {
     val (h, w) = spec.shape
-    for {
-      a <- assets if a.url != null
-      assetWin = spec.windowFor(a.bounds).intersect(Window(0, 0, w, h))
-      if !assetWin.isEmpty
-      yc <- (assetWin.rowOff / chunkY) to ((assetWin.rowEnd - 1) / chunkY)
-      xc <- (assetWin.colOff / chunkX) to ((assetWin.colEnd - 1) / chunkX)
-    } yield {
-      val cw = Window(xc * chunkX, yc * chunkY,
-        math.min(chunkX, w - xc * chunkX), math.min(chunkY, h - yc * chunkY))
-      (a, yc, xc, cw.intersect(assetWin))
-    }
+    val win = spec.windowFor(a.bounds).intersect(Window(0, 0, w, h))
+    if (win.isEmpty) (win, Range(0, 0), Range(0, 0))
+    else (win, (win.rowOff / chunkY) to ((win.rowEnd - 1) / chunkY),
+          (win.colOff / chunkX) to ((win.colEnd - 1) / chunkX))
   }
 
   /** Expand a sparse tile to the full dense chunk rectangle (fill = NaN).

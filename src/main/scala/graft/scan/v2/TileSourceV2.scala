@@ -252,7 +252,6 @@ final class TileAggScanV2(
     }
 
   private lazy val resultValues: Array[Any] = {
-    val grid = TileScan.chunkGrid(plan.spec, plan.chunk)
     var count = 0L
     val mins = mutable.HashMap.empty[String, Any]
     val maxs = mutable.HashMap.empty[String, Any]
@@ -267,15 +266,10 @@ final class TileAggScanV2(
       case m: Max => fieldOf(m.column).name
     }.distinct
     for {
-      a <- plan.assets if a.url != null
-      assetWin = plan.spec.windowFor(a.bounds)
-      if !assetWin.isEmpty
-      (yc, xc, cw) <- grid
-      if cw.intersects(assetWin)
+      (a, yc, xc, win) <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
       if pushed.forall(TileFilterEval.eval(_, a, yc, xc))
     } {
       count += 1
-      val win = cw.intersect(assetWin)
       neededCols.foreach { c =>
         val v = metaValue(c, a, yc, xc, win)
         if (!mins.contains(c) || lt(v, mins(c))) mins(c) = v
@@ -486,19 +480,14 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
   override def planInputPartitions(): Array[InputPartition] = runtimeFiltered(partitions)
 
   private def computePartitions(): Array[InputPartition] = {
-    val grid = TileScan.chunkGrid(plan.spec, plan.chunk)
     // metadata-only work-list with chunk-granular elision (R3) AND the
     // pushed predicates applied before any IO is scheduled (R1/R2)
     val byChunk = mutable.LinkedHashMap.empty[(Int, Int), mutable.ArrayBuffer[PlannedRead]]
     for {
-      a <- plan.assets if a.url != null
-      assetWin = plan.spec.windowFor(a.bounds)
-      if !assetWin.isEmpty
-      (yc, xc, cw) <- grid
-      if cw.intersects(assetWin)
+      (a, yc, xc, win) <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
       if pushed.forall(TileFilterEval.eval(_, a, yc, xc))
     } byChunk.getOrElseUpdate((yc, xc), mutable.ArrayBuffer.empty) +=
-        PlannedRead(a, yc, xc, cw.intersect(assetWin))
+        PlannedRead(a, yc, xc, win)
     val parts = byChunk.map { case ((yc, xc), rs) =>
       TileInputPartition(yc, xc, rs.toArray): InputPartition
     }

@@ -607,6 +607,11 @@ object ExactSubstr {
           (r.get(0), a)
         }
       val hById = hLocal.toMap
+      // a duplicated eval id would silently keep ONE of its arrays (which
+      // one depends on collect order): ids are a unique key, loudly
+      require(hLocal.length == hById.size,
+        s"ExactSubstr: eval id column $idCol is not unique (duplicated id " +
+          s"${hLocal.groupBy(_._1).collectFirst { case (id, hs) if hs.length > 1 => id }.get})")
       // OCTILES (r19, was quartering in r18): probe SEVEN interior
       // quantile points of every open bracket per round plus hi itself,
       // so the gap shrinks to ⌈gap/8⌉ — the 16-wide rung segments

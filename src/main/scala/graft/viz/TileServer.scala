@@ -54,6 +54,9 @@ final class TileServer(
   }
   private val inFlight = new ConcurrentHashMap[String, AnyRef]()
   private val prefetchPool = Executors.newFixedThreadPool(2)
+  /** The HTTP handler pool; its threads are non-daemon, so [[stop]] must
+    * shut it down or a JVM that served tiles never exits. */
+  private[graft] val httpPool = Executors.newFixedThreadPool(4)
   private var server: HttpServer = _
   private val hitCtr = new java.util.concurrent.atomic.AtomicLong()
   private val missCtr = new java.util.concurrent.atomic.AtomicLong()
@@ -170,13 +173,14 @@ final class TileServer(
       }
       ex.close()
     })
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    server.setExecutor(httpPool)
     server.start()
     server.getAddress.getPort
   }
 
   def stop(): Unit = {
     if (server != null) server.stop(0)
+    httpPool.shutdownNow()
     prefetchPool.shutdownNow()
     cached.unpersist()
   }

@@ -363,4 +363,19 @@ class ExactSubstrSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(clamped === Map(10L -> 5, 20L -> 5), clamped.toString)
   }
+
+  test("longestSharedSubstr: a duplicated eval id fails loudly on the driver-probe route") {
+    val shared = "ABCDEFGHIJKLMNOPQRSTUVWX"
+    val train = Seq((1L, s"train one $shared tail")).toDF("doc_id", "text")
+    val eval = Seq(
+      (10L, s"eval a ${shared.take(12)}!"),
+      (10L, s"eval b $shared?"),
+      (20L, s"eval c ${shared.take(9)}#")).toDF("doc_id", "text")
+    val err = intercept[IllegalArgumentException] {
+      ExactSubstr.longestSharedSubstr(train, eval, "text", "doc_id",
+        Seq(8, 16), maxProbe = 32).collect()
+    }
+    assert(err.getMessage.contains("not unique") && err.getMessage.contains("10"),
+      err.getMessage)
+  }
 }

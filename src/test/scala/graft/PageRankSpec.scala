@@ -57,4 +57,23 @@ class PageRankSpec extends SparkSpec {
       assert(local == dist, s"rounds=$rounds")
     }
   }
+
+  test("distributed floor division is exact Long division at quotients >= 1e11") {
+    // a ~5e5-leaf hub divides a ~1e11-quotient rank by its degree: the
+    // dividend passes 2^53, where a Double quotient loses its last unit
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 2000).map { _ =>
+      val den = 400000L + rnd.nextInt(200000)
+      val num = (100000000000L + (rnd.nextLong() & 0xffffffffffL)) * den + rnd.nextInt(den.toInt)
+      (num, den)
+    }
+    val df = rows.toDF("num", "den")
+    val exact = rows.map { case (n, d) => n / d }
+    val got = df.select(PageRank.floorDiv($"num", $"den")).as[Long].collect().toSeq
+    assert(got == exact)
+    // the Double route these rows replace is off by one somewhere here
+    val viaDouble = df.select((($"num" - pmod($"num", $"den")) / $"den").cast("long"))
+      .as[Long].collect().toSeq
+    assert(viaDouble != exact, "the case must reach the range where Double division drifts")
+  }
 }

@@ -121,4 +121,60 @@ class TileScanSpec extends SparkSpec with GenChecks {
         readerFor = _ => BoomReader(), errorsAsNodata = bad).collect()
     }
   }
+
+  /** The edge cases the per-asset enumeration must get right: a missing
+    * asset, one fully off the grid, ones sticking out on each side, one
+    * whose edges lie exactly on chunk boundaries and a zero-area one. */
+  private val edgeAssets: Seq[AssetRow] = Seq(
+    AssetRow(90, 0, "b0", 90L, null, -4, -4, 4, 4, 1.0, 0.0),
+    AssetRow(91, 0, "b0", 91L, "fake://91/0", 10, 10, 14, 14, 1.0, 0.0),
+    AssetRow(92, 0, "b0", 92L, "fake://92/0", -7, -1, 1, 6, 1.0, 0.0),
+    AssetRow(93, 0, "b0", 93L, "fake://93/0", 2, -9, 9, -2, 2.0, 5.0),
+    AssetRow(94, 0, "b0", 94L, "fake://94/0", -4, 0, 0, 4, 1.0, 0.0),
+    AssetRow(95, 0, "b0", 95L, "fake://95/0", 1, 1, 1, 3, 1.0, 0.0))
+
+  /** Driver-side oracle: read every work-list pair, rescale, elide
+    * all-NaN reads — the scan's output as a row multiset. */
+  private def expandWorkList(assets: Seq[AssetRow], cy: Int, cx: Int): Map[Seq[Any], Int] =
+    TileScan.workList(assets, spec, cy, cx).flatMap { case (a, yc, xc, win) =>
+      val px = FakeReader(a.url).read(win).map(_ * a.scale + a.offset)
+      if (px.forall(_.isNaN)) None
+      else Some(Tile(a.itemIdx, a.assetIdx, a.band, a.timeMicros, yc, xc,
+        win.rowOff - yc * cy, win.colOff - xc * cx, win.height, win.width, px))
+    }.map(rowKey).groupBy(identity).view.mapValues(_.size).toMap
+
+  private def rowKey(t: Tile): Seq[Any] =
+    Seq(t.itemIdx, t.assetIdx, t.band, t.timeMicros, t.yChunk, t.xChunk,
+      t.rowOff, t.colOff, t.height, t.width,
+      t.pixels.map(java.lang.Double.doubleToLongBits).toSeq)
+
+  test("scan rows and partitioning equal a driver-side expansion of workList (fuzz)") {
+    val par = spark.sparkContext.defaultParallelism
+    val gen = for {
+      ni <- Gen.choose(1, 5); nb <- Gen.choose(1, 3)
+      assets <- genAssets(ni, nb)
+      cy <- Gen.oneOf(1, 3, 4, 8, 16, 20); cx <- Gen.oneOf(2, 5, 8, 16)
+    } yield (assets ++ edgeAssets, cy, cx)
+    forAllN(gen, n = 12) { case (assets, cy, cx) =>
+      val ds = TileScan.scan(spark, assets, spec, cy, cx,
+        a => FakeReader(a.url), ErrorsAsNodata.none, applyRescale = true)
+      val got = ds.collect().toSeq.map(rowKey).groupBy(identity).view.mapValues(_.size).toMap
+      assert(got == expandWorkList(assets, cy, cx), s"chunks ($cy, $cx)")
+      val pairs = TileScan.workList(assets, spec, cy, cx).size
+      assert(ds.rdd.getNumPartitions == math.max(1, math.min(pairs, 2 * par)),
+        s"chunks ($cy, $cx): $pairs pairs")
+    }
+  }
+
+  test("the scan plan ships one row per planned asset, not one per pair") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val assets = edgeAssets :+
+      AssetRow(96, 0, "b0", 96L, "fake://96/0", -4, -4, 4, 4, 1.0, 0.0)
+    val pairs = TileScan.workList(assets, spec, 2, 2).size
+    val planned = assets.count(_.url != null)
+    val ds = TileScan.scan(spark, assets, spec, chunk = 2)
+    val rels = ds.queryExecution.analyzed.collect { case r: LocalRelation => r.data.size }
+    assert(rels == Seq(planned), s"$pairs pairs")
+    assert(pairs > 10 * planned)
+  }
 }

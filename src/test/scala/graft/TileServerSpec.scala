@@ -145,6 +145,10 @@ class TileServerSpec extends SparkSpec {
         pngs.foreach(p => assert(p.sameElements(first(k).head), s"$k changed after caching"))
       }
     } finally server.stop()
+    // stop() also ends the HTTP handler pool: its non-daemon threads
+    // would otherwise keep the JVM alive after serving
+    assert(server.httpPool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS),
+      "HTTP executor still running after stop()")
   }
 
   test("Stack.serve: the one-call show() analog serves RGB tiles over HTTP") {

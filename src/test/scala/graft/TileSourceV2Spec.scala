@@ -263,4 +263,90 @@ class TileSourceV2Spec extends SparkSpec {
       s"reported stats must drive a hint-free broadcast:\n$pre")
     assert(!pre.contains("SortMergeJoin"), s"fact side must not shuffle:\n$pre")
   }
+
+  test("work-list planning equals the chunk-grid cross-product: partitions, reads, pushed aggregates") {
+    import org.apache.spark.sql.connector.expressions.Expressions.column
+    import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
+    import org.apache.spark.sql.connector.read.InputPartition
+    import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In, Or}
+    import graft.scan.v2.{AggResultPartition, PlannedRead, ScanPlan, TileAggScanV2, TileInputPartition, TileScanV2}
+
+    // The enumeration the v2 source planned with before it shared
+    // TileScan.workList: every asset against every chunk of the grid.
+    def crossProduct(as: Seq[AssetRow], ch: Int, keep: (AssetRow, Int, Int) => Boolean): Seq[PlannedRead] = {
+      val grid = TileScan.chunkGrid(spec, ch)
+      for {
+        a <- as if a.url != null
+        assetWin = spec.windowFor(a.bounds)
+        if !assetWin.isEmpty
+        (yc, xc, cw) <- grid
+        if cw.intersects(assetWin)
+        if keep(a, yc, xc)
+      } yield PlannedRead(a, yc, xc, cw.intersect(assetWin))
+    }
+    def byChunk(reads: Seq[PlannedRead]): Seq[((Int, Int), Seq[PlannedRead])] = {
+      val m = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), Vector[PlannedRead]]
+      reads.foreach(r => m((r.yChunk, r.xChunk)) = m.getOrElse((r.yChunk, r.xChunk), Vector.empty) :+ r)
+      m.toSeq
+    }
+    def meta(r: PlannedRead, ch: Int): Map[String, Any] = Map(
+      "itemIdx" -> r.asset.itemIdx, "band" -> r.asset.band, "timeMicros" -> r.asset.timeMicros,
+      "yChunk" -> r.yChunk, "xChunk" -> r.xChunk,
+      "rowOff" -> (r.window.rowOff - r.yChunk * ch), "colOff" -> (r.window.colOff - r.xChunk * ch),
+      "height" -> r.window.height, "width" -> r.window.width)
+    val aggCols = Seq("itemIdx", "band", "timeMicros", "yChunk", "xChunk", "rowOff", "colOff", "height", "width")
+    val aggFns: Array[AggregateFunc] = (new CountStar: AggregateFunc) +:
+      aggCols.flatMap(c => Seq(new Min(column(c)), new Max(column(c)))).toArray[AggregateFunc]
+    def order(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Int, y: Int) => x < y
+      case (x: Long, y: Long) => x < y
+      case (x: String, y: String) => x < y
+      case _ => false
+    }
+    def expectedAgg(reads: Seq[PlannedRead], ch: Int): Seq[Any] = {
+      val ms = reads.map(meta(_, ch))
+      reads.size.toLong +: aggCols.flatMap { c =>
+        val vs = ms.map(_(c))
+        if (vs.isEmpty) Seq(null, null) else Seq(vs.reduce((a, b) => if (order(b, a)) b else a),
+          vs.reduce((a, b) => if (order(a, b)) b else a))
+      }
+    }
+
+    // (pushed filters, the same predicate on work-list metadata)
+    val filterCases: Seq[(Array[Filter], (AssetRow, Int, Int) => Boolean)] = Seq(
+      (Array.empty, (_, _, _) => true),
+      (Array(EqualTo("band", "b1")), (a, _, _) => a.band == "b1"),
+      (Array(In("yChunk", Array[Any](0, 2)), GreaterThanOrEqual("itemIdx", 1)),
+        (a, yc, _) => (yc == 0 || yc == 2) && a.itemIdx >= 1),
+      (Array(Or(EqualTo("xChunk", 1), EqualTo("timeMicros", 0L))),
+        (a, _, xc) => xc == 1 || a.timeMicros == 0L))
+
+    val rnd = new scala.util.Random(23)
+    var planned = 0
+    for (trial <- 0 until 8) {
+      val ch = Seq(3, 5, 8, 16)(trial % 4)
+      // footprints from -80 to 240 map units around the 0..160 grid: many
+      // assets stick out of it, some miss it entirely, some are missing
+      val as = (0 until 12).map { k =>
+        val x0 = rnd.nextInt(32) * 10 - 80; val y0 = rnd.nextInt(32) * 10 - 80
+        val w = rnd.nextInt(12) * 10; val h = rnd.nextInt(12) * 10
+        AssetRow(k / 3, k % 3, s"b${k % 3}", (k / 3).toLong * 1000L,
+          if (rnd.nextInt(6) == 0) null else s"fake://$trial/$k",
+          x0, y0, x0 + w, y0 + h, 1.0, 0.0)
+      }
+      val plan = ScanPlan(as, spec, ch, a => FakeReader(a.url), ErrorsAsNodata.none, applyRescale = true)
+      for (((pushed, keep), fi) <- filterCases.zipWithIndex) {
+        val want = crossProduct(as, ch, keep)
+        planned += want.size
+        val parts = new TileScanV2(plan, pushed, TileSourceV2.schema).planInputPartitions()
+          .map { case p: TileInputPartition => (p.yChunk, p.xChunk) -> p.reads.toSeq }.toSeq
+        assert(parts == byChunk(want), s"trial $trial (chunk $ch), filter case $fi")
+        val agg: InputPartition =
+          new TileAggScanV2(plan, pushed, new Aggregation(aggFns, Array.empty)).planInputPartitions().head
+        val got = agg.asInstanceOf[AggResultPartition].values.toSeq
+        assert(got == expectedAgg(want, ch), s"trial $trial (chunk $ch), filter case $fi")
+      }
+    }
+    assert(planned > 100, s"the fuzz planned only $planned reads")
+  }
 }
