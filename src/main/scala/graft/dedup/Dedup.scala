@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.graph.SizeRoute
 
 /** Deduplication operators for large text corpora, as reusable DataFrame
   * transformers. All hash choices are md5-derived so results are
@@ -761,13 +762,6 @@ object Dedup {
         col("matched").cast("double") / col("n_grams"))
   }
 
-  /** cap+1 as a safe Int for limit(): a size-route gate only asks "more
-    * than cap rows?", so a limit-bounded count prices it O(cap)
-    * regardless of input size. Shared by every size-routed op
-    * (connectedComponents, Scc, KCore). */
-  private[graft] def capPlusOne(cap: Long): Int =
-    (math.min(cap, Int.MaxValue - 2L) + 1L).toInt
-
   /** True when the analyzed plan is an already-materialized relation (a
     * LogicalRDD from a prior localCheckpoint, a LocalRelation) or a thin
     * attribute/alias/cast projection over one — re-evaluating such a plan
@@ -805,7 +799,8 @@ object Dedup {
     * labels chase their own label's label, so convergence is
     * O(log diameter) shuffle rounds — the standard large-graph CC shape
     * (each round is two shuffle joins; no driver-side graph state, only a
-    * convergence counter). Input: (id_a, id_b) Long edges. Output:
+    * convergence counter). Input: (id_a, id_b) integral-id edges (see
+    * [[SizeRoute.longIds]]: other id types throw). Output:
     * (node, component) where component = min node id reachable.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
@@ -813,25 +808,19 @@ object Dedup {
     val spark = edges.sparkSession
     import spark.implicits._
     // evaluate the upstream pipeline ONCE (it is typically a whole dedup
-    // chain), then SIZE-ROUTE: an edge list that fits one task is
-    // union-found in memory — one job, zero label-propagation rounds
-    // (the r47/stitch routing discipline, applied at the source all
-    // CC consumers share); bigger graphs take the min-label +
-    // pointer-jump loop below. Labels are identical either way: the
-    // component-minimum node id.
+    // chain), then size-route (see SizeRoute): an edge list that fits
+    // one task is union-found in memory; bigger graphs take the
+    // min-label + pointer-jump loop below. Labels are identical either
+    // way: the component-minimum node id.
     // Skip the checkpoint when the caller ALREADY materialized the edges
     // (a LogicalRDD from a prior localCheckpoint, or a LocalRelation, or
     // a thin cast/rename projection over one): re-running that projection
     // over cached blocks per use is cheaper than a second edge-sized
     // materialization pass.
-    val castEdges = edges.toDF("a", "b")
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    val castEdges = SizeRoute.longIds(edges).toDF("a", "b")
     val e = if (isMaterialized(edges.queryExecution.analyzed)) castEdges
             else castEdges.localCheckpoint(true)
-    // O(cap) gate: the route choice needs only "more than localCap
-    // edges?" — limit(cap+1) prices it cap-bounded regardless of input
-    // size (the Equalize/Ann limit-then-check pattern)
-    if (e.limit(capPlusOne(localCap)).count() <= localCap) {
+    if (SizeRoute.fits(e, localCap)) {
       return e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
         val parent = new scala.collection.mutable.HashMap[Long, Long]()
         def find(x0: Long): Long = {
@@ -852,13 +841,7 @@ object Dedup {
         parent.keysIterator.map(k => (k, find(k))).toArray.iterator
       }.toDF("node", "component")
     }
-    // symmetrize via explode, not a self-union: the edge list is typically
-    // the output of a whole dedup pipeline, and a union would evaluate
-    // that pipeline once per branch (Spark does no CSE across branches)
-    val sym = e.select(explode(array(
-        struct($"a", $"b"), struct($"b".as("a"), $"a".as("b")))).as("p"))
-      .select($"p.a".as("a"), $"p.b".as("b"))
-      .distinct().localCheckpoint(true)
+    val sym = SizeRoute.symmetrize(e)
     // Each round references the previous labels several times (neighbor
     // join + pointer-jump self-join), so the logical plan would double
     // per iteration without truncation — localCheckpoint cuts the lineage

@@ -34,34 +34,15 @@ object KCore {
                   localCap: Long = 262144L): DataFrame = {
     require(k >= 1, s"KCore: k=$k")
     require(rounds >= 1, s"KCore: rounds=$rounds")
-    val e0 = edges.toDF("a", "b")
-    var e = e0.select(explode(array(
-        struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-      .localCheckpoint(true)
-    // O(cap) gate (the Scc/connectedComponents pattern): the route
-    // choice needs only "more than localCap directed edges?", so price
-    // it limit(cap+1) over the just-checkpointed blocks. The FULL count
-    // below (`prev`) is the distributed loop's convergence baseline,
-    // NOT the gate — it only runs on the distributed path.
-    val gate = e.limit(graft.dedup.Dedup.capPlusOne(localCap)).count()
-    // SIZE ROUTING (the connectedComponents/Scc discipline): a graph
-    // that fits the cap peels on the driver in memory — a cap-bounded
-    // collect (≤ localCap 16-byte rows, the loud-guard collect class),
-    // zero per-round job floors; the same synchronous-round semantics
-    // and the same loud budget contract. Bigger graphs take the
-    // distributed loop below.
-    if (gate > 0L && gate <= localCap) {
-      val spark = edges.sparkSession
-      import spark.implicits._
+    var e = SizeRoute.symmetrize(edges)
+    // size route (see SizeRoute): a graph within localCap peels on the
+    // driver with the same synchronous rounds and budget contract
+    SizeRoute.localEdges(e, localCap).foreach { rows =>
       val adj = new scala.collection.mutable.HashMap[Long,
         scala.collection.mutable.HashSet[Long]]()
-      e.select(col("a").cast("long"), col("b").cast("long"))
-        .as[(Long, Long)].collect().foreach { case (a, b) =>
-          adj.getOrElseUpdate(a,
-            new scala.collection.mutable.HashSet[Long]()) += b
-        }
+      rows.foreach { case (a, b) =>
+        adj.getOrElseUpdate(a, new scala.collection.mutable.HashSet[Long]()) += b
+      }
       var it = 0
       var done = adj.isEmpty
       while (it < rounds && !done) {
@@ -93,10 +74,12 @@ object KCore {
         s"converged (${adj.size} nodes still peeling) — the graph's " +
         "peel depth exceeds the budget. Raise `rounds`: overshoot is " +
         "free, the loop exits at the first no-op round.")
+      val spark = edges.sparkSession
+      import spark.implicits._
       return adj.iterator.map { case (v, s) => (v, s.size.toLong) }
         .toSeq.toDF("node", "deg")
     }
-    var prev = e.count() // convergence baseline — full count, gate above is O(cap)
+    var prev = e.count() // convergence baseline — full count, the gate is O(cap)
     var converged = prev == 0L
     var it = 0
     while (it < rounds && !converged) {

@@ -38,24 +38,9 @@ object LabelProp {
   def propagate(edges: DataFrame, rounds: Int,
                 localCap: Long = 1048576L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.toDF("a", "b")
-    val sym = e.select(explode(array(
-        struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-      .localCheckpoint(true)
-    // SIZE ROUTE (r19, the Flow/Scc/KCore discipline): a symmetrized
-    // edge list within localCap runs the SAME synchronous vote rounds
-    // in driver memory — integer counts and min-label ties are exact
-    // either way, fixed-round semantics identical, fixpoint early-exit
-    // identical — for 2 jobs instead of 2 per round. Non-Long ids and
-    // bigger graphs take the distributed loop unchanged.
-    if (sym.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType) &&
-        sym.limit(graft.dedup.Dedup.capPlusOne(localCap)).count() <= localCap) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val symRows = sym.as[(Long, Long)].collect()
+    val sym = SizeRoute.symmetrize(edges)
+    // size route (see SizeRoute): the same vote rounds in driver memory
+    SizeRoute.localEdges(sym, localCap).foreach { symRows =>
       val nodes: Array[Long] = symRows.iterator.map(_._1).toSet.toArray.sorted
       var lab: Map[Long, Long] = nodes.iterator.map(n => n -> n).toMap
       var it = 0
@@ -81,6 +66,8 @@ object LabelProp {
         lab = next
         it += 1
       }
+      val spark = edges.sparkSession
+      import spark.implicits._
       // deterministic row order regardless of collect order/parallelism
       return lab.toList.sortBy(_._1).toDF("node", "label")
     }

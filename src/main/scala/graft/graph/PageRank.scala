@@ -31,24 +31,10 @@ object PageRank {
                    dampingMicro: Long = 850000L,
                    localCap: Long = 1048576L): DataFrame = {
     require(rounds >= 1 && dampingMicro >= 0 && dampingMicro <= 1000000L)
-    val e = edges.toDF("a", "b")
-    val sym = e.select(explode(array(
-        struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-      .localCheckpoint(true) // consumed every round; never re-derive
-    // SIZE ROUTE (r19, the Flow/Scc/KCore/LabelProp discipline): the
-    // rank recurrence is exact integer micro-units (floor divisions
-    // only), so a symmetrized edge list within localCap runs the same
-    // fixed rounds in driver memory — identical ranks — for 2 jobs
-    // instead of 1-2 per round. Non-Long ids and bigger graphs take
-    // the distributed loop unchanged.
-    if (sym.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType) &&
-        sym.limit(graft.dedup.Dedup.capPlusOne(localCap)).count() <= localCap) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val symRows = sym.as[(Long, Long)].collect()
+    val sym = SizeRoute.symmetrize(edges)
+    // size route (see SizeRoute): the rank recurrence is exact integer
+    // micro-units, so the driver replays the same fixed rounds
+    SizeRoute.localEdges(sym, localCap).foreach { symRows =>
       val degL = new scala.collection.mutable.HashMap[Long, Long]()
       symRows.foreach { case (a, _) => degL(a) = degL.getOrElse(a, 0L) + 1L }
       val nodesL: Array[Long] = degL.keysIterator.toArray.sorted
@@ -66,6 +52,8 @@ object PageRank {
         }.toMap
         it += 1
       }
+      val spark = edges.sparkSession
+      import spark.implicits._
       // deterministic row order regardless of collect order/parallelism
       return rank.toList.sortBy(_._1).toDF("node", "rank")
     }

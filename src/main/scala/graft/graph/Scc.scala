@@ -85,26 +85,18 @@ object Scc {
     // accumulator gate riding the checkpoint job: the typed
     // mapPartitions codecs cost MORE in per-run plan compilation than
     // the retired gate job — reverted; SCALE.md r18.)
-    var e = edges.toDF("src", "dst")
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
+    var e = SizeRoute.longIds(edges).toDF("src", "dst")
       .distinct().localCheckpoint(true)
-    // SIZE ROUTING (the connectedComponents discipline): a digraph that
-    // fits one task runs ITERATIVE TARJAN in memory — one job, zero
-    // propagation/trim/refinement round floors; bigger graphs take the
-    // FW-BW loop below. Cap raised 262k -> 1M in r17: the boundary probe
+    // size route (see SizeRoute): a digraph that fits one task runs
+    // ITERATIVE TARJAN in memory; bigger graphs take the FW-BW loop
+    // below. Cap raised 262k -> 1M in r17: the boundary probe
     // (SCALE.md) showed the distributed route 5.0x the local route on a
     // trim-resistant fixture AT the old cap (2.9 vs 14.7 s on 131k
     // 2-cycles), while 1M edges cost one task ~16 MB of rows and
     // ~100 MB of Tarjan state — comfortably inside any executor. Labels
     // identical either way: the component-minimum node id (SccSpec's
     // Floyd-Warshall fuzz gates both routes).
-    // O(cap) gate: the route choice needs only "are there more than
-    // localCap edges", so price it limit(cap+1) regardless of input
-    // size (the Equalize/Ann limit-then-check pattern) — a 100 TB edge
-    // list pays a cap-bounded scan of its just-checkpointed blocks,
-    // not a full count
-    if (e.limit(graft.dedup.Dedup.capPlusOne(localCap)).count() <= localCap) {
+    if (SizeRoute.fits(e, localCap)) {
       return e.as[(Long, Long)].coalesce(1).mapPartitions { it =>
           tarjanMinLabels(it).iterator
         }.toDF("node", "scc")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.graph.SizeRoute
 import graft.scan.Tile
 
 /** D8 flow ACCUMULATION — the hydrology consumer of
@@ -65,30 +66,6 @@ object Flow {
     }.toDF("src", "dst")
   }
 
-  /** SIZE ROUTE for the iterative hydrology ops (r19, the Scc/KCore
-    * route discipline applied to [[accumulate]]/[[basins]]/
-    * [[distanceToOutlet]]/[[strahler]]): an edge list that fits one
-    * driver array runs the SAME synchronous rounds in driver memory —
-    * identical integer arithmetic, identical fixpoint/settled-probe
-    * semantics, identical loud budget/cycle throws — for 2 jobs total
-    * (the O(cap) `limit(cap+1)` gate + one cap-bounded collect) instead
-    * of 2-3 jobs PER ROUND of joins, checkpoints and isEmpty probes.
-    * Measured r19 (sf0.1, 32c): the fixture's 150x150 grids spend
-    * ~80-90% of their wall in the per-round job floor, not data. A
-    * bigger-than-cap edge list takes the distributed loop unchanged
-    * (the 100 TB route), and non-Long edge columns always go
-    * distributed (the local route would silently widen their types).
-    * Caps are per-op parameters with the KCore default scale. */
-  private def localEdges(e: DataFrame, cap: Long): Option[Array[(Long, Long)]] = {
-    import org.apache.spark.sql.types.LongType
-    val longCols = e.schema.fields.forall(_.dataType == LongType)
-    if (!longCols) return None
-    if (e.limit(graft.dedup.Dedup.capPlusOne(cap)).count() > cap) return None
-    val spark = e.sparkSession
-    import spark.implicits._
-    Some(e.as[(Long, Long)].collect())
-  }
-
   /** Upstream-cell counts (node, acc) for every node with ≥ 1 upstream
     * cell over a FUNCTIONAL edge list (≤ 1 out-edge per src — the
     * [[d8Edges]] contract; a src with several out-edges would
@@ -98,7 +75,7 @@ object Flow {
                  localCap: Long = 1048576L): DataFrame = {
     require(rounds >= 1, s"Flow: rounds=$rounds")
     val e = edges.toDF("src", "dst").localCheckpoint(true)
-    localEdges(e, localCap).foreach { rows =>
+    SizeRoute.localEdges(e, localCap).foreach { rows =>
       return accumulateLocal(e.sparkSession, rows, rounds)
     }
     val indeg = e.groupBy(col("dst").as("node"))
@@ -271,11 +248,11 @@ object Flow {
                             localCap: Long): DataFrame = {
     require(rounds >= 1, s"Flow: rounds=$rounds")
     val e = edges.toDF("node", "p").localCheckpoint(true)
-    // size route (see [[localEdges]]): only for a FUNCTIONAL edge list
+    // size route (see SizeRoute): only for a FUNCTIONAL edge list
     // (distinct srcs) — a src with several out-edges multiplies rows in
     // the distributed self-join, a contract violation the local walk
     // will not reproduce, so it falls through to the distributed loop
-    localEdges(e, localCap).foreach { rows =>
+    SizeRoute.localEdges(e, localCap).foreach { rows =>
       if (rows.iterator.map(_._1).toSet.size == rows.length)
         return resolveForestLocal(e.sparkSession, rows, rounds)
     }
@@ -744,7 +721,7 @@ object Flow {
                localCap: Long = 1048576L): DataFrame = {
     require(rounds >= 1, s"Flow: rounds=$rounds")
     val e = edges.toDF("src", "dst").localCheckpoint(true)
-    localEdges(e, localCap).foreach { rows =>
+    SizeRoute.localEdges(e, localCap).foreach { rows =>
       return strahlerLocal(e.sparkSession, rows, rounds)
     }
     val nodes = e.select(col("src").as("node"))

@@ -130,6 +130,20 @@ class DedupSpec extends SparkSpec {
     assert(dist === got)
   }
 
+  test("connected components: fractional ids throw on both routes " +
+      "instead of merging nodes") {
+    import spark.implicits._
+    import graft.dedup.Dedup
+    // 1.0 and 1.5 would both cast to node 1
+    val edges = Seq((1.0, 1.5), (2.0, 3.0)).toDF("id_a", "id_b")
+    for (cap <- Seq(262144L, 0L)) {
+      val ex = intercept[IllegalArgumentException] {
+        Dedup.connectedComponents(edges, localCap = cap).collect()
+      }
+      assert(ex.getMessage.contains("`id_a`") && ex.getMessage.contains("double"))
+    }
+  }
+
   test("dedupCorpus keeps one representative per near-dup cluster") {
     import spark.implicits._
     import graft.dedup.Dedup

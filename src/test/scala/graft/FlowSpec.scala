@@ -128,37 +128,6 @@ class FlowSpec extends SparkSpec {
       5L -> (4L, 2L), 4L -> (4L, 0L)))
   }
 
-  test("size route: local and distributed routes produce identical rows") {
-    // r19: small edge lists run the synchronous rounds on the driver
-    // (localCap gate); localCap = 0 forces the distributed loop. Both
-    // routes must agree row-for-row on a forest with confluences,
-    // multi-node basins, and depth > 1 — same values, same absence
-    // convention, same terminals.
-    val rnd = new scala.util.Random(23)
-    val edges = (1 until 120).flatMap { i =>
-      if (rnd.nextDouble() < 0.8) Some((i.toLong, rnd.nextInt(i).toLong)) else None
-    }.toDF("src", "dst")
-    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
-      df.collect().map(r => (0 until r.length).map(r.getLong)).toSet
-    assert(rows(Flow.accumulate(edges, 16)) ==
-      rows(Flow.accumulate(edges, 16, localCap = 0L)))
-    assert(rows(Flow.basins(edges, 8)) ==
-      rows(Flow.basins(edges, 8, localCap = 0L)))
-    assert(rows(Flow.distanceToOutlet(edges, 8)) ==
-      rows(Flow.distanceToOutlet(edges, 8, localCap = 0L)))
-    assert(rows(Flow.strahler(edges, 16)) ==
-      rows(Flow.strahler(edges, 16, localCap = 0L)))
-    // duplicated edges count twice in accumulate/strahler on BOTH routes
-    val dup = (Seq((1L, 2L), (1L, 2L), (2L, 3L), (4L, 3L))).toDF("src", "dst")
-    assert(rows(Flow.accumulate(dup, 8)) ==
-      rows(Flow.accumulate(dup, 8, localCap = 0L)))
-    assert(rows(Flow.strahler(dup, 8)) ==
-      rows(Flow.strahler(dup, 8, localCap = 0L)))
-    // a non-functional list (duplicate src) falls through to the
-    // distributed pointer loop — both calls give the same rows
-    assert(rows(Flow.basins(dup, 8)) == rows(Flow.basins(dup, 8, localCap = 0L)))
-  }
-
   test("distanceToOutlet fuzz: random forest == driver depth walk") {
     val rnd = new scala.util.Random(17)
     val edges = (1 until 80).flatMap { i =>

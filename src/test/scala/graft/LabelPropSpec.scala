@@ -58,25 +58,6 @@ class LabelPropSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  test("size route: local and distributed routes produce identical labels") {
-    // r19: small graphs run the vote rounds on the driver (localCap
-    // gate); localCap = 0 forces the distributed loop. Fuzz graph with
-    // communities, bridges, ties, and oscillation-prone structure.
-    import spark.implicits._
-    val rnd = new scala.util.Random(29)
-    val edges = (0 until 150).map { _ =>
-      (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)
-    }.filter(t => t._1 != t._2)
-    for (rounds <- Seq(1, 2, 3, 5)) {
-      val local = LabelProp.propagate(edges.toDF("a", "b"), rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = LabelProp.propagate(edges.toDF("a", "b"), rounds,
-          localCap = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist, s"rounds=$rounds")
-    }
-  }
-
   test("rounds guard") {
     import spark.implicits._
     intercept[IllegalArgumentException] {

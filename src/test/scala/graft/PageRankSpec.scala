@@ -40,24 +40,6 @@ class PageRankSpec extends SparkSpec {
     assert(run(1) === run(13))
   }
 
-  test("size route: local and distributed routes produce identical ranks") {
-    // r19: small graphs run the integer rank rounds on the driver
-    // (localCap gate); localCap = 0 forces the distributed loop.
-    import spark.implicits._
-    val rnd = new scala.util.Random(31)
-    val edges = (0 until 120).map { _ =>
-      (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)
-    }.filter(t => t._1 != t._2)
-    for (rounds <- Seq(1, 3)) {
-      val local = PageRank.integerRanks(edges.toDF("a", "b"), rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = PageRank.integerRanks(edges.toDF("a", "b"), rounds,
-          localCap = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist, s"rounds=$rounds")
-    }
-  }
-
   test("distributed floor division is exact Long division at quotients >= 1e11") {
     // a ~5e5-leaf hub divides a ~1e11-quotient rank by its degree: the
     // dividend passes 2^53, where a Double quotient loses its last unit

@@ -137,4 +137,15 @@ class SccSpec extends SparkSpec {
         Map(7L -> 7L, 1L -> 1L, 2L -> 1L))
     }
   }
+
+  test("fractional ids throw on both routes instead of merging nodes") {
+    // 1.0 and 1.5 would both cast to node 1
+    val df = Seq((1.0, 1.5), (1.5, 1.0), (2.0, 3.0)).toDF("src", "dst")
+    for (cap <- Seq(1048576L, 0L)) {
+      val ex = intercept[IllegalArgumentException] {
+        Scc.components(df, localCap = cap).collect()
+      }
+      assert(ex.getMessage.contains("`src`") && ex.getMessage.contains("double"))
+    }
+  }
 }
