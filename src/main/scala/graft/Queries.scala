@@ -1120,7 +1120,7 @@ object Queries {
       (s, _) => {
         import s.implicits._
         import graft.core.{Bounds, RasterSpec}
-        import graft.scan.{AssetRow, TileScan}
+        import graft.scan.{AssetRow, PlannedRead, TileScan}
         val cases = Seq(
           ("grid10",    0.0,    1000.0, 10.0, 10.0, 1000.0, 0.0,    32, 32),
           ("dec",       0.0,    10.01,  0.1,  0.1,  10.01,  0.0,     7,  5),
@@ -1143,7 +1143,7 @@ object Queries {
               AssetRow(ai, ai, "b", 0L, if (hasUrl) s"fake://$cid/$ai" else null,
                 bx0, by0, bx1, by1, 1.0, 0.0)
             }
-            TileScan.workList(rows, spec, chy, chx).map { case (ar, yc, xc, win) =>
+            TileScan.workList(rows, spec, chy, chx).map { case PlannedRead(ar, yc, xc, win) =>
               (cid, ar.itemIdx, yc, xc, win.colOff, win.rowOff, win.width, win.height)
             }
         }.toDF("cid", "aidx", "yc", "xc", "col_off", "row_off", "win_w", "win_h")
@@ -5626,7 +5626,7 @@ object Queries {
     // ANY parallelism (repartition hashes (yChunk,xChunk); a single key
     // maps to a single partition whatever nPart is — this is what makes
     // the count engine-deterministic and the A/B parallelism-invariant).
-    // The per-task reader cache (TileScan.scan's open-once map, S7) must
+    // The per-task reader cache (ReaderCache, shared by both scans, S7) must
     // therefore construct exactly count(DISTINCT url) = 7 readers for 20
     // work rows — without the cache this reads 20. A LongAccumulator in
     // readerFor observes the opens; RampReader's closed-form pixels give

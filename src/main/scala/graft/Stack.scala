@@ -99,14 +99,13 @@ final case class Stack(
 
   /** Declared-dtype materialization — `stack(dtype=, fill_value=)` parity
     * (reference `to_dask.py:39-43`, `prepare.py:166-183`): validates
-    * fill-value castability and (when rescaling was applied) every
+    * fill-value castability and, since the scan always rescales, every
     * asset's scale/offset castability, then fills nodata and casts each
     * cell (truncate-toward-zero, clipped). Tiles keep the Double carrier;
     * the values are exactly the dtype's. */
-  def cast(dtype: graft.core.CellType, fillValue: Double = Double.NaN,
-           rescale: Boolean = true): Dataset[Tile] = {
+  def cast(dtype: graft.core.CellType, fillValue: Double = Double.NaN): Dataset[Tile] = {
     graft.core.CellType.requireFill(dtype, fillValue)
-    if (rescale) assetTable.filter(_.url != null)
+    assetTable.filter(_.url != null)
       .foreach(a => graft.core.CellType.requireRescale(dtype, a.scale, a.offset))
     import spark.implicits._
     tiles.map(t => t.copy(pixels =

@@ -8,8 +8,8 @@ package graft.core
   *  - fill_value castability at stack build (`to_dask.py:39-43`):
   *    NaN fill demands a float dtype;
   *  - rescale scale/offset castability at plan time
-  *    (`prepare.py:166-183`): fractional scales force a float dtype or
-  *    `rescale=false`;
+  *    (`prepare.py:166-183`): the scan always rescales, so fractional
+  *    scales force a float dtype;
   *  - NaN-nodata-on-int-mosaic usage guard (`ops.py:202-208`);
   *  - the final cast on materialize (truncate toward zero like numpy
   *    `astype`, clipped to the dtype's range instead of wrapping).
@@ -79,18 +79,16 @@ object CellType {
       s"The fill_value $fillValue is incompatible with the output dtype ${dtype.name}. " +
       "Either use dtype='float64', or pick a different fill_value.")
 
-  /** Rescale castability per asset (reference `prepare.py:166-183`): with
-    * rescale on, every asset's scale/offset must be representable in the
-    * output dtype. */
+  /** Rescale castability per asset (reference `prepare.py:166-183`): the
+    * scan rescales every asset, so its scale/offset must be representable
+    * in the output dtype. */
   def requireRescale(dtype: CellType, scale: Double, offset: Double): Unit = {
     require(dtype.canRepresent(scale),
-      s"rescale=true, but safe casting cannot be completed between asset scale " +
-      s"value $scale and output dtype ${dtype.name}. Pass rescale=false for raw " +
-      "values, or a float dtype for rescaled ones.")
+      s"Safe casting cannot be completed between asset scale value $scale and " +
+      s"output dtype ${dtype.name}: the scan rescales every asset, so use a float dtype.")
     require(dtype.canRepresent(offset),
-      s"rescale=true, but safe casting cannot be completed between asset offset " +
-      s"value $offset and output dtype ${dtype.name}. Pass rescale=false for raw " +
-      "values, or a float dtype for rescaled ones.")
+      s"Safe casting cannot be completed between asset offset value $offset and " +
+      s"output dtype ${dtype.name}: the scan rescales every asset, so use a float dtype.")
   }
 
   /** NaN-nodata on an integral mosaic is a usage error (reference

@@ -77,6 +77,9 @@ object Reproject {
   def apply(tiles: Dataset[Tile], srcSpec: RasterSpec, dstSpec: RasterSpec,
             srcChunk: Int, dstChunk: Int,
             method: Resampling = Resampling.Nearest): Dataset[Tile] = {
+    require(method == Resampling.Nearest || method == Resampling.Bilinear,
+      s"Reproject samples Nearest or Bilinear only, not $method; the read-time " +
+      "warp (WarpedGridReader, scan/Warp.scala) implements every Resampling method.")
     if (srcSpec == dstSpec && srcChunk == dstChunk) return tiles
 
     val spark = tiles.sparkSession

@@ -66,9 +66,10 @@ object TileScan {
     * partitioning and chunk placement equal those of the driver-side
     * [[workList]].
     *
-    * `readerFor` is evaluated lazily once per asset per task; Spark's
-    * process-per-task model replaces the reference's thread-local GDAL
-    * dataset machinery (`rio_reader.py:124-265`).
+    * Each task reads through one [[ReaderCache]], the read body it shares
+    * with the v2 source; Spark's process-per-task model replaces the
+    * reference's thread-local GDAL dataset machinery
+    * (`rio_reader.py:124-265`).
     */
   def scan(
       spark: SparkSession,
@@ -76,9 +77,8 @@ object TileScan {
       spec: RasterSpec,
       chunk: Int = 1024,
       readerFor: AssetRow => Reader = a => FakeReader(a.url),
-      errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none,
-      applyRescale: Boolean = true): Dataset[Tile] =
-    scan(spark, assets, spec, chunk, chunk, readerFor, errorsAsNodata, applyRescale)
+      errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Dataset[Tile] =
+    scan(spark, assets, spec, chunk, chunk, readerFor, errorsAsNodata)
 
   /** Rectangular-chunk scan: edges usually come from
     * `Chunks.spatialEdges(ChunksParam.parse("auto"), spec)`. */
@@ -88,8 +88,7 @@ object TileScan {
       spec: RasterSpec,
       chunkY: Int, chunkX: Int,
       readerFor: AssetRow => Reader,
-      errorsAsNodata: ErrorsAsNodata,
-      applyRescale: Boolean): Dataset[Tile] = {
+      errorsAsNodata: ErrorsAsNodata): Dataset[Tile] = {
     import spark.implicits._
 
     val planned = assets.filter(_.url != null)
@@ -101,34 +100,19 @@ object TileScan {
     val nPart = math.max(1L, math.min(nPairs, spark.sparkContext.defaultParallelism * 2L)).toInt
     spark.createDataset(planned)
       .flatMap(a => pairsOf(a, spec, chunkY, chunkX))
-      .repartition(nPart, $"_2", $"_3") // co-locate by (yChunk, xChunk) for downstream per-chunk aggs
+      .repartition(nPart, $"yChunk", $"xChunk") // co-locate by chunk for downstream per-chunk aggs
       .mapPartitions { it =>
-        // Per-task reader cache: each URL opened at most once per task
-        // (the reference enforces this via dask fusion-blocking, R7
-        // `to_dask.py:65-69`; here it's a plain lazy map). Readers are
-        // closed when the task completes — file-backed readers hold fds.
-        val open = scala.collection.mutable.HashMap.empty[String, Reader]
-        Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          open.values.foreach(r => try r.close() catch { case _: Throwable => () })
-        })
-        it.flatMap { case (a, yc, xc, win) =>
-          val reader = open.getOrElseUpdate(a.url, readerFor(a))
-          val px =
-            try reader.read(win)
-            catch {
-              case e: Throwable if errorsAsNodata.matches(e) =>
-                Array.fill(win.width * win.height)(Double.NaN)
-            }
-          if (applyRescale && (a.scale != 1.0 || a.offset != 0.0)) {
-            var i = 0
-            while (i < px.length) { px(i) = px(i) * a.scale + a.offset; i += 1 }
-          }
+        val reads = new ReaderCache(readerFor, errorsAsNodata)
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => reads.close()))
+        it.flatMap { r =>
+          val px = reads.read(r)
           // Sparse elision (R4): an all-nodata read produces no row.
           if (px.forall(_.isNaN)) Iterator.empty
           else Iterator.single(Tile(
-            a.itemIdx, a.assetIdx, a.band, a.timeMicros, yc, xc,
-            win.rowOff - yc * chunkY, win.colOff - xc * chunkX,
-            win.height, win.width, px))
+            r.asset.itemIdx, r.asset.assetIdx, r.asset.band, r.asset.timeMicros,
+            r.yChunk, r.xChunk, r.rowOff(chunkY), r.colOff(chunkX),
+            r.window.height, r.window.width, px))
         }
       }
   }
@@ -143,22 +127,21 @@ object TileScan {
     * enumeration inside its tasks, and the v2 source plans its reads and
     * answers pushed aggregates from this list.
     */
-  def workList(assets: Seq[AssetRow], spec: RasterSpec,
-               chunk: Int): Seq[(AssetRow, Int, Int, Window)] =
+  def workList(assets: Seq[AssetRow], spec: RasterSpec, chunk: Int): Seq[PlannedRead] =
     workList(assets, spec, chunk, chunk)
 
   def workList(assets: Seq[AssetRow], spec: RasterSpec,
-               chunkY: Int, chunkX: Int): Seq[(AssetRow, Int, Int, Window)] =
+               chunkY: Int, chunkX: Int): Seq[PlannedRead] =
     assets.filter(_.url != null).flatMap(pairsOf(_, spec, chunkY, chunkX))
 
-  /** The (asset, yChunk, xChunk, read window) pairs of one asset, in
-    * row-major chunk order: the asset window clamped to the grid, cut at
-    * every chunk it overlaps. Empty when the asset misses the grid. */
+  /** The planned reads of one asset, in row-major chunk order: the asset
+    * window clamped to the grid, cut at every chunk it overlaps. Empty
+    * when the asset misses the grid. */
   def pairsOf(a: AssetRow, spec: RasterSpec,
-              chunkY: Int, chunkX: Int): Seq[(AssetRow, Int, Int, Window)] = {
+              chunkY: Int, chunkX: Int): Seq[PlannedRead] = {
     val (win, ys, xs) = overlap(a, spec, chunkY, chunkX)
     for (yc <- ys; xc <- xs)
-      yield (a, yc, xc, Window(xc * chunkX, yc * chunkY, chunkX, chunkY).intersect(win))
+      yield PlannedRead(a, yc, xc, Window(xc * chunkX, yc * chunkY, chunkX, chunkY).intersect(win))
   }
 
   /** An asset's window clamped to the grid, and the row and column chunk

@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{RasterSpec, Window}
-import graft.scan.{AssetRow, ErrorsAsNodata, FakeReader, Reader, TileScan}
+import graft.core.RasterSpec
+import graft.scan.{AssetRow, ErrorsAsNodata, FakeReader, PlannedRead, Reader, ReaderCache, TileScan}
 
 /** The scan configuration a [[TileSourceProvider]] table reads: the
   * planned asset list + output grid (SURVEY §2.1 S3's products) plus the
@@ -30,8 +30,7 @@ final case class ScanPlan(
     spec: RasterSpec,
     chunk: Int,
     readerFor: AssetRow => Reader,
-    errorsAsNodata: ErrorsAsNodata,
-    applyRescale: Boolean)
+    errorsAsNodata: ErrorsAsNodata)
 
 /** Driver-side handoff of non-serializable plan state into the DSv2
   * `TableProvider` (which Spark instantiates reflectively from a class
@@ -81,6 +80,11 @@ object TilePlanRegistry {
   *  - One `InputPartition` per (yChunk, xChunk): downstream per-chunk
   *    aggregations (mosaic, temporal) consume co-located tiles.
   *
+  * Planning uses [[TileScan.workList]]'s [[graft.scan.PlannedRead]]s, and
+  * pixels are read through [[graft.scan.ReaderCache]], the one read body
+  * (open-once, errors-as-nodata, scale/offset) shared with
+  * [[TileScan.scan]].
+  *
   * Usage: `TileSourceV2.scan(spark, assets, spec, chunk, ...)` or
   * `spark.read.format(classOf[TileSourceProvider].getName).option("plan", token).load()`.
   */
@@ -105,10 +109,8 @@ object TileSourceV2 {
       spec: RasterSpec,
       chunk: Int = 1024,
       readerFor: AssetRow => Reader = a => FakeReader(a.url),
-      errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none,
-      applyRescale: Boolean = true): DataFrame = {
-    val token = TilePlanRegistry.register(
-      ScanPlan(assets, spec, chunk, readerFor, errorsAsNodata, applyRescale))
+      errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): DataFrame = {
+    val token = TilePlanRegistry.register(ScanPlan(assets, spec, chunk, readerFor, errorsAsNodata))
     spark.read.format(classOf[TileSourceProvider].getName)
       .option("plan", token).load()
   }
@@ -235,22 +237,6 @@ final class TileAggScanV2(
   override def description(): String =
     s"graft_tiles AGG-PUSHDOWN [${agg.aggregateExpressions.mkString(", ")}] pushed=[${pushed.mkString(", ")}]"
 
-  /** Metadata value of one planned read, mirroring the reader's
-    * projection exactly (rowOff/colOff are chunk-relative). */
-  private def metaValue(name: String, a: AssetRow, yc: Int, xc: Int, win: Window): Any =
-    name match {
-      case "itemIdx" => a.itemIdx
-      case "assetIdx" => a.assetIdx
-      case "band" => a.band
-      case "timeMicros" => a.timeMicros
-      case "yChunk" => yc
-      case "xChunk" => xc
-      case "rowOff" => win.rowOff - yc * plan.chunk
-      case "colOff" => win.colOff - xc * plan.chunk
-      case "height" => win.height
-      case "width" => win.width
-    }
-
   private lazy val resultValues: Array[Any] = {
     var count = 0L
     val mins = mutable.HashMap.empty[String, Any]
@@ -266,12 +252,12 @@ final class TileAggScanV2(
       case m: Max => fieldOf(m.column).name
     }.distinct
     for {
-      (a, yc, xc, win) <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
-      if pushed.forall(TileFilterEval.eval(_, a, yc, xc))
+      r <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
+      if pushed.forall(TileFilterEval.eval(_, r, plan.chunk))
     } {
       count += 1
       neededCols.foreach { c =>
-        val v = metaValue(c, a, yc, xc, win)
+        val v = r.meta(c, plan.chunk, plan.chunk)
         if (!mins.contains(c) || lt(v, mins(c))) mins(c) = v
         if (!maxs.contains(c) || lt(maxs(c), v)) maxs(c) = v
       }
@@ -322,15 +308,6 @@ private[v2] object TileFilterEval {
     case _ => false
   }
 
-  /** Metadata value of a pushable column for one candidate pair. */
-  private def value(a: AssetRow, yc: Int, xc: Int, col: String): Any = col match {
-    case "band" => a.band
-    case "timeMicros" => a.timeMicros
-    case "itemIdx" => a.itemIdx
-    case "yChunk" => yc
-    case "xChunk" => xc
-  }
-
   private def isIntegral(n: Number): Boolean = n match {
     case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
          _: java.lang.Byte => true
@@ -349,16 +326,20 @@ private[v2] object TileFilterEval {
     case _ => 0
   }
 
-  def eval(f: Filter, a: AssetRow, yc: Int, xc: Int): Boolean = f match {
-    case EqualTo(c, v) => value(a, yc, xc, c) == v || cmp(value(a, yc, xc, c), v) == 0
-    case In(c, vs) => vs.exists(v => eval(EqualTo(c, v), a, yc, xc))
-    case GreaterThan(c, v) => cmp(value(a, yc, xc, c), v) > 0
-    case GreaterThanOrEqual(c, v) => cmp(value(a, yc, xc, c), v) >= 0
-    case LessThan(c, v) => cmp(value(a, yc, xc, c), v) < 0
-    case LessThanOrEqual(c, v) => cmp(value(a, yc, xc, c), v) <= 0
-    case And(l, r) => eval(l, a, yc, xc) && eval(r, a, yc, xc)
-    case Or(l, r) => eval(l, a, yc, xc) || eval(r, a, yc, xc)
-    case _ => true
+  /** Does planned read `r` (of a scan with square `chunk` edges) pass `f`? */
+  def eval(f: Filter, r: PlannedRead, chunk: Int): Boolean = {
+    def value(c: String): Any = r.meta(c, chunk, chunk)
+    f match {
+      case EqualTo(c, v) => value(c) == v || cmp(value(c), v) == 0
+      case In(c, vs) => vs.exists(v => eval(EqualTo(c, v), r, chunk))
+      case GreaterThan(c, v) => cmp(value(c), v) > 0
+      case GreaterThanOrEqual(c, v) => cmp(value(c), v) >= 0
+      case LessThan(c, v) => cmp(value(c), v) < 0
+      case LessThanOrEqual(c, v) => cmp(value(c), v) <= 0
+      case And(a, b) => eval(a, r, chunk) && eval(b, r, chunk)
+      case Or(a, b) => eval(a, r, chunk) || eval(b, r, chunk)
+      case _ => true
+    }
   }
 }
 
@@ -451,8 +432,7 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
     if (runtime.isEmpty) parts
     else parts.map { p =>
       val tp = p.asInstanceOf[TileInputPartition]
-      tp.copy(reads = tp.reads.filter(r =>
-        runtime.forall(TileFilterEval.eval(_, r.asset, r.yChunk, r.xChunk))))
+      tp.copy(reads = tp.reads.filter(r => runtime.forall(TileFilterEval.eval(_, r, plan.chunk))))
     }
 
   /** Advertise the scan's NATIVE clustering: one input partition per
@@ -484,10 +464,9 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
     // pushed predicates applied before any IO is scheduled (R1/R2)
     val byChunk = mutable.LinkedHashMap.empty[(Int, Int), mutable.ArrayBuffer[PlannedRead]]
     for {
-      (a, yc, xc, win) <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
-      if pushed.forall(TileFilterEval.eval(_, a, yc, xc))
-    } byChunk.getOrElseUpdate((yc, xc), mutable.ArrayBuffer.empty) +=
-        PlannedRead(a, yc, xc, win)
+      r <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
+      if pushed.forall(TileFilterEval.eval(_, r, plan.chunk))
+    } byChunk.getOrElseUpdate((r.yChunk, r.xChunk), mutable.ArrayBuffer.empty) += r
     val parts = byChunk.map { case ((yc, xc), rs) =>
       TileInputPartition(yc, xc, rs.toArray): InputPartition
     }
@@ -503,11 +482,8 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    TileReaderFactory(plan.chunk, plan.readerFor, plan.errorsAsNodata,
-      plan.applyRescale, required.fieldNames)
+    TileReaderFactory(plan.chunk, plan.readerFor, plan.errorsAsNodata, required.fieldNames)
 }
-
-final case class PlannedRead(asset: AssetRow, yChunk: Int, xChunk: Int, window: Window)
 
 final case class TileInputPartition(yChunk: Int, xChunk: Int, reads: Array[PlannedRead])
     extends InputPartition
@@ -524,75 +500,44 @@ final case class TileReaderFactory(
     chunk: Int,
     readerFor: AssetRow => Reader,
     errorsAsNodata: ErrorsAsNodata,
-    applyRescale: Boolean,
     fieldNames: Array[String]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TilePartitionReader(partition.asInstanceOf[TileInputPartition].reads,
-      chunk, readerFor, errorsAsNodata, applyRescale, fieldNames)
+      chunk, new ReaderCache(readerFor, errorsAsNodata), fieldNames)
 }
 
+/** Emits one row per planned read, reading pixels through the scan's
+  * shared [[ReaderCache]] only when the projection keeps `pixels`. */
 final class TilePartitionReader(
     reads: Array[PlannedRead],
     chunk: Int,
-    readerFor: AssetRow => Reader,
-    errorsAsNodata: ErrorsAsNodata,
-    applyRescale: Boolean,
+    cache: ReaderCache,
     fieldNames: Array[String]) extends PartitionReader[InternalRow] {
 
   private val needPixels = fieldNames.contains("pixels")
-  private val open = mutable.HashMap.empty[String, Reader]
   private var i = -1
   private var row: InternalRow = _
 
   override def next(): Boolean = {
     i += 1
     if (i >= reads.length) return false
-    val PlannedRead(a, yc, xc, win) = reads(i)
-    val px: Array[Double] =
-      if (!needPixels) null // column pruning => zero pixel IO (R5)
-      else {
-        val r = open.getOrElseUpdate(a.url, readerFor(a))
-        val p =
-          try r.read(win)
-          catch {
-            case e: Throwable if errorsAsNodata.matches(e) =>
-              Array.fill(win.width * win.height)(Double.NaN)
-          }
-        if (applyRescale && (a.scale != 1.0 || a.offset != 0.0)) {
-          var k = 0
-          while (k < p.length) { p(k) = p(k) * a.scale + a.offset; k += 1 }
-        }
-        p
-      }
+    val r = reads(i)
+    // column pruning => zero pixel IO, no reader opened (R5)
+    val px = if (needPixels) cache.read(r) else null
     // NO value-based elision here (unlike TileScan.scan): the row set must
     // be identical under every projection, or `count()` and a pixel
     // aggregate over the same source would disagree (DSv2 requires
     // pruning to be a pure optimization). All-nodata tiles flow through;
     // consumers filter them explicitly if they want R4 sparsity.
-    row = project(a, yc, xc, win, px)
-    true
-  }
-
-  private def project(
-      a: AssetRow, yc: Int, xc: Int, win: Window, px: Array[Double]): InternalRow = {
-    val vals = fieldNames.map {
-      case "itemIdx" => a.itemIdx
-      case "assetIdx" => a.assetIdx
-      case "band" => UTF8String.fromString(a.band)
-      case "timeMicros" => a.timeMicros
-      case "yChunk" => yc
-      case "xChunk" => xc
-      case "rowOff" => win.rowOff - yc * chunk
-      case "colOff" => win.colOff - xc * chunk
-      case "height" => win.height
-      case "width" => win.width
+    row = new GenericInternalRow(fieldNames.map[Any] {
+      case "band" => UTF8String.fromString(r.asset.band)
       case "pixels" => org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(px)
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
+      case c => r.meta(c, chunk, chunk)
+    })
+    true
   }
 
   override def get(): InternalRow = row
 
-  override def close(): Unit =
-    open.values.foreach(r => try r.close() catch { case _: Throwable => () })
+  override def close(): Unit = cache.close()
 }

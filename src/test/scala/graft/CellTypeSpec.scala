@@ -93,4 +93,20 @@ class CellTypeSpec extends SparkSpec {
     val mosaic = stack.mosaicAs(UInt16, nodata = 9999.0).collect().flatMap(_.pixels)
     assert(mosaic.forall(v => v == math.rint(v) && v >= 0))
   }
+
+  test("Stack.cast on a rescaled asset demands a float dtype, and says only that") {
+    import graft.core.{AffineTransform, Bounds}
+    val items = Seq(StacItem("a", Some("2024-01-01T00:00:00Z"), epsg = Some(32633),
+      assets = Map("b" -> StacAsset("fake://a",
+        bbox = Some(Bounds(0, 0, 160, 160)), shape = Some((16, 16)),
+        transform = Some(AffineTransform.northUp(0, 160, 10, 10)), scale = 0.5))))
+    val stack = Stack(spark, items, chunk = 16)
+    val err = intercept[IllegalArgumentException](stack.cast(Int16, fillValue = 0.0))
+    assert(err.getMessage.contains("0.5") && err.getMessage.contains("float dtype"),
+      err.getMessage)
+    assert(!err.getMessage.contains("rescale=false"), err.getMessage)
+    // a float dtype keeps the rescaled values exactly
+    val cells = stack.cast(Float64).collect().flatMap(_.pixels)
+    assert(cells.nonEmpty && cells.exists(v => v != math.rint(v)))
+  }
 }

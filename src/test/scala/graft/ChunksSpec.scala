@@ -85,8 +85,7 @@ class ChunksSpec extends SparkSpec {
     val assets = Seq(AssetRow(0, 0, "b", 0L, "ramp://0", 0, 0, 170, 130, 1.0, 0.0))
     def collectGlobal(chunkY: Int, chunkX: Int): Map[(Int, Int), Double] =
       TileScan.scan(spark, assets, spec, chunkY, chunkX,
-          readerFor = _ => RampReader(17), errorsAsNodata = graft.scan.ErrorsAsNodata.none,
-          applyRescale = true)
+          readerFor = _ => RampReader(17), errorsAsNodata = graft.scan.ErrorsAsNodata.none)
         .collect().flatMap { t =>
           for (r <- 0 until t.height; c <- 0 until t.width) yield
             (t.yChunk * chunkY + t.rowOff + r, t.xChunk * chunkX + t.colOff + c) ->
@@ -108,7 +107,7 @@ class ChunksSpec extends SparkSpec {
     def run(cy: Int, cx: Int): (Map[(Int, Double, Double), Double], Long) = {
       val tiles = TileScan.scan(spark, assets, spec, cy, cx,
         readerFor = _ => RampReader(17),
-        errorsAsNodata = graft.scan.ErrorsAsNodata.none, applyRescale = true)
+        errorsAsNodata = graft.scan.ErrorsAsNodata.none)
       val px = Pixels.toPixels(tiles, spec, cy, cx, center = true)
         .collect()
         .map(r => (r.getInt(0), r.getDouble(3), r.getDouble(4)) -> r.getDouble(5))

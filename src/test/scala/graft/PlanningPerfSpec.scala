@@ -39,7 +39,7 @@ class PlanningPerfSpec extends AnyFunSuite {
 
   test("scan work-list is O(assets x overlap): 1e4 assets x 1e4 chunks plans in seconds") {
     import graft.core.RasterSpec
-    import graft.scan.{AssetRow, TileScan}
+    import graft.scan.{AssetRow, PlannedRead, TileScan}
     // 100x100-chunk grid (1e4 chunks at chunk=256 over a 25600^2-px spec);
     // 1e4 assets, each overlapping ~4 chunks. The old O(assets x chunks)
     // loop would do 1e8 window intersections here; the direct chunk-range
@@ -57,7 +57,7 @@ class PlanningPerfSpec extends AnyFunSuite {
     assert(pairs.size >= 10000, s"expected >=1 chunk per asset, got ${pairs.size}")
     assert(ms < 5000.0, s"work-list took $ms ms for ${pairs.size} pairs")
     // every pair's window is non-empty and chunk-contained
-    assert(pairs.forall { case (_, yc, xc, win) =>
+    assert(pairs.forall { case PlannedRead(_, yc, xc, win) =>
       !win.isEmpty && win.rowOff >= yc * 256 && win.colOff >= xc * 256 &&
       win.rowEnd <= (yc + 1) * 256 && win.colEnd <= (xc + 1) * 256
     })

@@ -62,4 +62,37 @@ class ReprojectSpec extends SparkSpec {
     // all valid values must come from the source value domain [0, 128)
     out.foreach(_.pixels.filter(!_.isNaN).foreach(v => assert(v >= 0 && v < 128)))
   }
+
+  test("only Nearest and Bilinear sample here; other methods point to the read-time warp") {
+    val tiles = scanOne()
+    val dst = RasterSpec(32633, Bounds(500005, 4000005, 500635, 4000635), 7, 7)
+    for (m <- Seq(Resampling.Cubic, Resampling.Mode)) {
+      val err = intercept[IllegalArgumentException](Reproject(tiles, srcSpec, dst, chunk, chunk, m))
+      assert(err.getMessage.contains(m.toString) && err.getMessage.contains("WarpedGridReader"),
+        err.getMessage)
+    }
+    // Nearest and Bilinear still sample: on a linear ramp, nearest returns
+    // the source pixel under each center and bilinear the ramp's exact value
+    val ramp = TileScan.scan(spark, Seq(AssetRow(0, 0, "b", 0L, "ramp://0",
+      500000, 4000000, 500640, 4000640, 1.0, 0.0)), srcSpec, chunk,
+      readerFor = _ => graft.scan.RampReader(64))
+    def sampled(m: Resampling) = Reproject(ramp, srcSpec, dst, chunk, chunk, m).collect()
+      .flatMap { t =>
+        for (r <- 0 until t.height; c <- 0 until t.width)
+          yield (t.yChunk * chunk + r, t.xChunk * chunk + c) -> t.pixels(r * t.width + c)
+      }
+    // dst pixel (r, c) centers at src fractional (0.5 + 0.7 (r + 0.5), 0.5 + 0.7 (c + 0.5))
+    def src(k: Int) = 0.5 + 0.7 * (k + 0.5)
+    val near = sampled(Resampling.Nearest)
+    assert(near.length == 90 * 90)
+    near.foreach { case ((r, c), v) =>
+      assert(v == math.floor(src(r)) * 64 + math.floor(src(c)), s"nearest at ($r,$c)")
+    }
+    val bil = sampled(Resampling.Bilinear)
+    bil.foreach { case ((r, c), v) =>
+      assert(v.isNaN || math.abs(v - ((src(r) - 0.5) * 64 + (src(c) - 0.5))) < 1e-6,
+        s"bilinear at ($r,$c)")
+    }
+    assert(bil.count(!_._2.isNaN) > 80 * 80)
+  }
 }

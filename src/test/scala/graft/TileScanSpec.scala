@@ -136,7 +136,7 @@ class TileScanSpec extends SparkSpec with GenChecks {
   /** Driver-side oracle: read every work-list pair, rescale, elide
     * all-NaN reads — the scan's output as a row multiset. */
   private def expandWorkList(assets: Seq[AssetRow], cy: Int, cx: Int): Map[Seq[Any], Int] =
-    TileScan.workList(assets, spec, cy, cx).flatMap { case (a, yc, xc, win) =>
+    TileScan.workList(assets, spec, cy, cx).flatMap { case PlannedRead(a, yc, xc, win) =>
       val px = FakeReader(a.url).read(win).map(_ * a.scale + a.offset)
       if (px.forall(_.isNaN)) None
       else Some(Tile(a.itemIdx, a.assetIdx, a.band, a.timeMicros, yc, xc,
@@ -157,7 +157,7 @@ class TileScanSpec extends SparkSpec with GenChecks {
     } yield (assets ++ edgeAssets, cy, cx)
     forAllN(gen, n = 12) { case (assets, cy, cx) =>
       val ds = TileScan.scan(spark, assets, spec, cy, cx,
-        a => FakeReader(a.url), ErrorsAsNodata.none, applyRescale = true)
+        a => FakeReader(a.url), ErrorsAsNodata.none)
       val got = ds.collect().toSeq.map(rowKey).groupBy(identity).view.mapValues(_.size).toMap
       assert(got == expandWorkList(assets, cy, cx), s"chunks ($cy, $cx)")
       val pairs = TileScan.workList(assets, spec, cy, cx).size

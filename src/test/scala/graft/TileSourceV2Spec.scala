@@ -179,8 +179,7 @@ class TileSourceV2Spec extends SparkSpec {
   test("runtime filtering prunes reads but preserves partition count and keys") {
     import graft.scan.v2._
     import org.apache.spark.sql.sources.In
-    val plan = ScanPlan(assets, spec, chunk, a => FakeReader(a.url),
-      ErrorsAsNodata.none, applyRescale = true)
+    val plan = ScanPlan(assets, spec, chunk, a => FakeReader(a.url), ErrorsAsNodata.none)
     val scan = new TileScanBuilder(plan).build()
     val before = scan.toBatch.planInputPartitions()
       .map(_.asInstanceOf[TileInputPartition])
@@ -269,7 +268,7 @@ class TileSourceV2Spec extends SparkSpec {
     import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
     import org.apache.spark.sql.connector.read.InputPartition
     import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In, Or}
-    import graft.scan.v2.{AggResultPartition, PlannedRead, ScanPlan, TileAggScanV2, TileInputPartition, TileScanV2}
+    import graft.scan.v2.{AggResultPartition, ScanPlan, TileAggScanV2, TileInputPartition, TileScanV2}
 
     // The enumeration the v2 source planned with before it shared
     // TileScan.workList: every asset against every chunk of the grid.
@@ -334,7 +333,7 @@ class TileSourceV2Spec extends SparkSpec {
           if (rnd.nextInt(6) == 0) null else s"fake://$trial/$k",
           x0, y0, x0 + w, y0 + h, 1.0, 0.0)
       }
-      val plan = ScanPlan(as, spec, ch, a => FakeReader(a.url), ErrorsAsNodata.none, applyRescale = true)
+      val plan = ScanPlan(as, spec, ch, a => FakeReader(a.url), ErrorsAsNodata.none)
       for (((pushed, keep), fi) <- filterCases.zipWithIndex) {
         val want = crossProduct(as, ch, keep)
         planned += want.size
