@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark sweep. Measurement policy (round 8 — the verdict's
   * three instrument asks):
@@ -136,49 +135,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SHUFFLE SCRATCH ON tmpfs (r18, guide §7.3 measured + §9's
-    // fast-local-disk rule): thread dumps of 32-task stages showed
-    // executor threads RUNNABLE inside FileOutputStream.open0 /
-    // FileChannelImpl.map0/unmap0 — per-task shuffle-file open/mmap
-    // syscall latency on the sandbox filesystem, not compute, dominated
-    // every exchange (task runTime ~5x task cpuTime). Local-mode shuffle
-    // blocks here are KB-MB, so a RAM-backed spark.local.dir removes
-    // pure syscall overhead without touching any plan. Parameterised:
-    // SPARK_GRAFT_LOCAL_DIR overrides (a production cluster points this
-    // at its NVMe array per standard guidance); falls back to the Spark
-    // default when no tmpfs exists.
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-spark-local")
-      else None
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // accept subset-key co-location (storage-partitioned joins whose join
-      // keys are a superset of the V2 partition keys - TileAlgebra.binaryAligned)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val builder = localDir.fold(builder0)(d => builder0.config("spark.local.dir", d))
-    // The r16 AQE coalescing floor (minPartitionNum=8) is RETIRED: it was
-    // motivated by x23's serialized classifier CPU (8.6 -> 6.9 s), but the
-    // r17 expression-blowup barrier removed that serial CPU structurally,
-    // and a 3x A/B (SCALE.md r17) then showed the floor a wash on the
-    // CPU-heavy family while consistently taxing the iterative family's
-    // many tiny stages (x28 +0.1 s, x42 +0.3 s — the r16 task-backed
-    // regression). SPARK_GRAFT_AQE_MIN_PARTS re-enables it for A/Bs.
-    val spark = (sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTS", "0") match {
-      case "0" => builder
-      case v => builder.config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum", v)
-    }).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // dot_long/sorted_jaccard*/hamming_dist in SQL
+    val cpus = Session.cpusFromEnv
+    val spark = Session.start(Session.builder(cpus))
     // Warm the session so the first timed query isn't charged JVM/codegen
     // startup: run one real parquet scan + hash-agg + sort pipeline.
     spark.read.parquet(s"$sfDir/region.parquet")

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftx.{CharGramHash, DotLong, HammingDist, MinhashSig, NgramHash, SortedJaccard, SortedJaccardLong, SortedIntersectLong}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graftx.GraftExpr
 
 /** Cluster-wide registration of graft's native SQL functions:
   *
@@ -11,40 +11,18 @@ import org.apache.spark.sql.graftx.{CharGramHash, DotLong, HammingDist, MinhashS
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * makes `dot_long`, `sorted_jaccard`, `sorted_jaccard_long` and
-  * `hamming_dist` available to every session (including pure-SQL users,
-  * thrift/Connect servers, and notebooks that never touch the Scala API)
-  * — the deploy-time complement of the per-session
-  * `GraftFunctions.register(spark)`.
+  * makes every function of `GraftExpr.sqlFunctions` (`dot_long`,
+  * `sorted_jaccard`, `hamming_dist`, the n-gram hashes, ...) available to
+  * every session (including pure-SQL users, thrift/Connect servers, and
+  * notebooks that never touch the Scala API) — the deploy-time complement
+  * of the per-session `GraftFunctions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((new FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-        builder))
-
-    inject("dot_long", "dot_long(a, b) - exact dot product of two BIGINT arrays",
-      es => DotLong(es.head, es(1)))
-    inject("sorted_jaccard", "sorted_jaccard(a, b) - jaccard of two sorted distinct string arrays",
-      es => SortedJaccard(es.head, es(1)))
-    inject("sorted_jaccard_long", "sorted_jaccard_long(a, b) - jaccard of two sorted distinct BIGINT arrays",
-      es => SortedJaccardLong(es.head, es(1)))
-    inject("sorted_intersect_long", "sorted_intersect_long(a, b) - intersection count of two sorted distinct BIGINT arrays",
-      es => SortedIntersectLong(es.head, es(1)))
-    inject("hamming_dist", "hamming_dist(a, b) - bit-population distance of two BIGINTs",
-      es => HammingDist(es.head, es(1)))
-    def litInt(e: Expression): Int = e.eval(null).asInstanceOf[Number].intValue()
-    inject("ngram_hashes", "ngram_hashes(text, n) - 60-bit md5 word-n-gram hashes, document order",
-      es => NgramHash(es.head, litInt(es(1)), sortedDistinct = false))
-    inject("chargram_hashes", "chargram_hashes(text, n) - 60-bit md5 character-n-gram hashes, document order",
-      es => CharGramHash(es.head, litInt(es(1)), sortedDistinct = false))
-    inject("chargram_hashes_sd", "chargram_hashes_sd(text, n) - sorted distinct 60-bit md5 character-n-gram hashes",
-      es => CharGramHash(es.head, litInt(es(1)), sortedDistinct = true))
-    inject("shingle_hashes", "shingle_hashes(text, n) - sorted distinct 60-bit md5 word-n-gram hashes",
-      es => NgramHash(es.head, litInt(es(1)), sortedDistinct = true))
-    inject("minhash_sig", "minhash_sig(text, n, k) - k MinHash minima (md5 hex) over word n-grams",
-      es => MinhashSig(es.head, litInt(es(1)), litInt(es(2))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExpr.sqlFunctions.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""),
+        f.build))
+    }
 }

@@ -162,8 +162,8 @@ object Stack {
     * typed filters and makes [[Stack.algebra]]'s band-align join a
     * STORAGE-PARTITIONED join — zero Exchange on either side (the
     * TileAlgebra.binaryAligned plan, SpjSpec/j14; needs the
-    * `requireAllClusterKeysForCoPartition=false` session conf every
-    * graft session sets). Semantics difference vs [[apply]], stated
+    * `requireAllClusterKeysForCoPartition=false` session conf that
+    * [[graft.Session]] sets). Semantics difference vs [[apply]], stated
     * plainly: the V2 scan does NOT elide all-nodata tiles (the DSv2
     * row-set contract — pruning must be a pure optimization), so a
     * chunk whose every tile is all-NaN yields an all-NaN composite

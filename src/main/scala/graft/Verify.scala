@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,34 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // accept subset-key co-location (storage-partitioned joins whose join
-      // keys are a superset of the V2 partition keys - TileAlgebra.binaryAligned)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // (the r16 AQE coalescing floor minPartitionNum=8 was retired in
-      // r17 with the x23 expression-blowup fix — see Bench.scala)
-      // events.parquet carries TIMESTAMP(NANOS); read as long, converted
-      // losslessly to micros in Queries.t (values have no sub-micro bits).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // RAM-backed shuffle scratch when available (see Bench.scala r18
-      // note: sandbox-filesystem shuffle-file syscalls dominated small
-      // stages); correctness is unaffected, runs are just faster
-      .config("spark.local.dir", sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-        .getOrElse {
-          val shm = new java.io.File("/dev/shm")
-          if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-spark-local"
-          else System.getProperty("java.io.tmpdir")
-        })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark) // dot_long/sorted_jaccard*/hamming_dist in SQL
+    val spark = Session.start(Session.builder(Session.cpusFromEnv))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

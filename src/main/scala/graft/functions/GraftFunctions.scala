@@ -45,6 +45,6 @@ object GraftFunctions {
     * pre-filter in front of an exact join. */
   def bloom_contains(bloomBytes: Array[Byte], value: Column): Column =
     GraftExpr.bloomContains(bloomBytes, value)
-  /** Register `dot_long`/`sorted_jaccard`/`hamming_dist` for SQL use. */
+  /** Register every `GraftExpr.sqlFunctions` entry for SQL use. */
   def register(spark: SparkSession): Unit = GraftExpr.register(spark)
 }

@@ -10,18 +10,6 @@ import graft.scan.{Tile, TileScan}
   */
 object TileAlgebra {
 
-  /** Unary per-pixel map (NaN propagates through `f` naturally). */
-  def mapPixels(ds: Dataset[Tile])(f: Double => Double): Dataset[Tile] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { t =>
-      val out = new Array[Double](t.pixels.length)
-      var i = 0
-      while (i < out.length) { out(i) = f(t.pixels(i)); i += 1 }
-      t.copy(pixels = out)
-    }
-  }
-
   /** Binary per-pixel combine of two single-band tile sets, aligned on
     * (itemIdx, yChunk, xChunk). Sparse alignment: a pixel missing on
     * either side is NaN (matches xarray NaN propagation). Inner join is
@@ -68,8 +56,8 @@ object TileAlgebra {
     * (itemIdx, yChunk, xChunk) SortMergeJoin as [[binary]] run with NO
     * shuffle: chunk i merges with chunk i in place.
     *
-    * TWO session confs gate it (both set by every graft session —
-    * Bench/Verify/SparkSpec):
+    * TWO session confs gate it (both set by [[graft.Session]], which
+    * builds every graft session):
     *
     *  - `spark.sql.sources.v2.bucketing.enabled=true` — honor DSv2
     *    KeyGroupedPartitioning at all;
@@ -113,8 +101,4 @@ object TileAlgebra {
                    (f: (Double, Double) => Double): Dataset[Tile] =
     binary(a.as[Tile](Encoders.product[Tile]),
            b.as[Tile](Encoders.product[Tile]), chunkY, chunkX, outBand)(f)
-
-  /** NDVI over two V2-sourced band scans, storage-partitioned join. */
-  def ndviAligned(nir: DataFrame, red: DataFrame, chunk: Int): Dataset[Tile] =
-    binaryAligned(nir, red, chunk, chunk, "ndvi")((n, r) => (n - r) / (n + r))
 }

@@ -892,23 +892,38 @@ object GraftExpr {
   def sortedJaccard(a: Column, b: Column): Column = col(SortedJaccard(ex(a), ex(b)))
   def hammingDist(a: Column, b: Column): Column = col(HammingDist(ex(a), ex(b)))
 
+  /** One SQL function: name, `DESCRIBE FUNCTION` usage, builder. */
+  final case class SqlFunction(name: String, usage: String, build: Seq[Expression] => Expression)
+
+  /** graft's SQL functions, listed once: [[register]] adds them to one
+    * session, `graft.GraftExtensions` to every session of a deployment. */
+  val sqlFunctions: Seq[SqlFunction] = {
+    def litInt(e: Expression): Int = e.eval(null).asInstanceOf[Number].intValue()
+    Seq(
+      SqlFunction("dot_long", "dot_long(a, b) - exact dot product of two BIGINT arrays",
+        es => DotLong(es.head, es(1))),
+      SqlFunction("sorted_jaccard", "sorted_jaccard(a, b) - jaccard of two sorted distinct string arrays",
+        es => SortedJaccard(es.head, es(1))),
+      SqlFunction("sorted_jaccard_long", "sorted_jaccard_long(a, b) - jaccard of two sorted distinct BIGINT arrays",
+        es => SortedJaccardLong(es.head, es(1))),
+      SqlFunction("sorted_intersect_long", "sorted_intersect_long(a, b) - intersection count of two sorted distinct BIGINT arrays",
+        es => SortedIntersectLong(es.head, es(1))),
+      SqlFunction("hamming_dist", "hamming_dist(a, b) - bit-population distance of two BIGINTs",
+        es => HammingDist(es.head, es(1))),
+      SqlFunction("ngram_hashes", "ngram_hashes(text, n) - 60-bit md5 word-n-gram hashes, document order",
+        es => NgramHash(es.head, litInt(es(1)), sortedDistinct = false)),
+      SqlFunction("shingle_hashes", "shingle_hashes(text, n) - sorted distinct 60-bit md5 word-n-gram hashes",
+        es => NgramHash(es.head, litInt(es(1)), sortedDistinct = true)),
+      SqlFunction("chargram_hashes", "chargram_hashes(text, n) - 60-bit md5 character-n-gram hashes, document order",
+        es => CharGramHash(es.head, litInt(es(1)), sortedDistinct = false)),
+      SqlFunction("chargram_hashes_sd", "chargram_hashes_sd(text, n) - sorted distinct 60-bit md5 character-n-gram hashes",
+        es => CharGramHash(es.head, litInt(es(1)), sortedDistinct = true)),
+      SqlFunction("minhash_sig", "minhash_sig(text, n, k) - k MinHash minima (md5 hex) over word n-grams",
+        es => MinhashSig(es.head, litInt(es(1)), litInt(es(2)))))
+  }
+
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dot_long", es => DotLong(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_jaccard", es => SortedJaccard(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_jaccard_long", es => SortedJaccardLong(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_long", es => SortedIntersectLong(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming_dist", es => HammingDist(es.head, es(1)), "scala_udf")
-    def litInt(e: Expression): Int = e.eval(null).asInstanceOf[Number].intValue()
-    reg.createOrReplaceTempFunction("ngram_hashes",
-      es => NgramHash(es.head, litInt(es(1)), sortedDistinct = false), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      es => NgramHash(es.head, litInt(es(1)), sortedDistinct = true), "scala_udf")
-    reg.createOrReplaceTempFunction("chargram_hashes",
-      es => CharGramHash(es.head, litInt(es(1)), sortedDistinct = false), "scala_udf")
-    reg.createOrReplaceTempFunction("chargram_hashes_sd",
-      es => CharGramHash(es.head, litInt(es(1)), sortedDistinct = true), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinhashSig(es.head, litInt(es(1)), litInt(es(2))), "scala_udf")
+    sqlFunctions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.build, "scala_udf"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftx.GraftExpr
 import org.scalatest.funsuite.AnyFunSuite
 
 /** spark.sql.extensions=graft.GraftExtensions must make the native
@@ -35,11 +36,16 @@ class GraftExtensionsSpec extends AnyFunSuite {
           "size(minhash_sig('a b c', 1, 8)) AS k")
         .collect().head
       assert(ng.getInt(0) === 3 && ng.getInt(1) === 2 && ng.getInt(2) === 8)
-    } finally {
-      // leave no session behind so later suites rebuild their own cleanly
-      s.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+      // the whole table, ten distinct names, resolves in the extension session
+      assert(GraftExpr.sqlFunctions.map(_.name).distinct.size === 10)
+      assert(unresolved(s).isEmpty, "not injected by the extension")
+    } finally SparkSpec.release(s)
+    // the per-session route registers the same table
+    val r = Session.start(Session.builder(2))
+    try assert(unresolved(r).isEmpty, "not registered by GraftFunctions.register")
+    finally SparkSpec.release(r)
   }
+
+  private def unresolved(s: SparkSession): Seq[String] =
+    GraftExpr.sqlFunctions.map(_.name).filterNot(s.catalog.functionExists)
 }

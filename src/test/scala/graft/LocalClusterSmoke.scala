@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Separate-JVM main for [[LocalClusterSpec]]. `local[32]` shares one
   * JVM between driver and executors, which hides closure-serialization
   * and class-loading bugs in exactly the surfaces a real cluster
@@ -78,25 +76,13 @@ object LocalClusterSmoke {
 
   def main(args: Array[String]): Unit = {
     val cp = System.getProperty("java.class.path")
-    val spark = SparkSession.builder()
+    val spark = Session.start(Session.builder(4)
       .master("local-cluster[2,2,1024]")
       .appName("graft-local-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // AQE may coalesce small-row CPU-HEAVY stages (per-doc LM scoring,
-      // classifier passes) down to 1-2 partitions, serializing real CPU:
-      // a parallelism floor keeps them wide (x23 8.6 -> 6.9 s; measured
-      // neutral on micro/shuffle-bound queries, SCALE.md r16)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "8")
       .config("spark.executor.extraClassPath", cp)
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.executor.memory", "1024m")
-      .getOrCreate()
+      .config("spark.executor.memory", "1024m"))
     try {
-      graft.functions.GraftFunctions.register(spark)
       val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
       representative.foreach { n =>
         val rows = SparkEntry.queries(n)(spark, dir).count()

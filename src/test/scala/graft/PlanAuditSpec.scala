@@ -218,14 +218,13 @@ class PlanAuditSpec extends SparkSpec {
     // during fn() construction (streaming queries execute eagerly; t()
     // sets the nanos knob; x11 scopes its CC shuffle partitions), so
     // constructing each query and diffing spark.conf.getAll catches any
-    // save/restore hole. nanosAsLong is the one allowed one-way set —
-    // documented in t() as deliberate session self-sufficiency.
-    val allowed = Set("spark.sql.legacy.parquet.nanosAsLong")
+    // save/restore hole. t()'s one-way nanosAsLong set is a no-op here:
+    // the Session-built spec session already carries it.
     val leaks = Queries.all.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val before = spark.conf.getAll
       fn(spark, dir)
       val after = spark.conf.getAll
-      val changed = (before.keySet ++ after.keySet).filterNot(allowed).filter {
+      val changed = (before.keySet ++ after.keySet).filter {
         k => before.get(k) != after.get(k)
       }
       changed.map(k => s"$name: $k ${before.get(k)} -> ${after.get(k)}")
@@ -246,7 +245,6 @@ class PlanAuditSpec extends SparkSpec {
     // without either, state grows without bound (asserted on the analyzed
     // plan; the query itself executes eagerly under the oracle gate)
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // batch analysis ELIMINATES watermark nodes, so the audit must run on
     // real streaming relations (never started — analysis only)
     val schema = spark.read.parquet(s"$dir/events.parquet").schema

@@ -8,10 +8,8 @@ import graft.ops.RangeJoin
 class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ev = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def ev =
     Queries.normTs(spark.read.parquet("/root/testdata/sf0.01/events.parquet"))
-  }
 
   test("bucketed join == naive theta join (pairs and counts)") {
     val p = ev.filter($"event_type" === "purchase")

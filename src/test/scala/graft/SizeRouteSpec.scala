@@ -158,16 +158,7 @@ class SizeRouteSpec extends SparkSpec {
   }
 
   test("source guard: capPlusOne( appears only in SizeRoute.scala") {
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val offenders = files(root).filter { f =>
-      f.getName.endsWith(".scala") && f.getName != "SizeRoute.scala" && {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString.contains("capPlusOne(") finally src.close()
-      }
-    }
+    val offenders = SourceGuard.offenders("src/main/scala/graft", "capPlusOne(", "SizeRoute.scala")
     assert(offenders.isEmpty, "hand-rolled size-route gate outside SizeRoute: " +
       offenders.mkString(", "))
   }

@@ -3,22 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (guide: lazy val). */
+/** Shared local session for specs — one per suite (guide: lazy val) —
+  * built by [[Session]], so specs run the session Bench and Verify run. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // accept subset-key co-location (storage-partitioned joins whose join
-      // keys are a superset of the V2 partition keys - TileAlgebra.binaryAligned)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // AQE may coalesce small-row CPU-HEAVY stages (per-doc LM scoring,
-      // classifier passes) down to 1-2 partitions, serializing real CPU:
-      // a parallelism floor keeps them wide (x23 8.6 -> 6.9 s; measured
-      // neutral on micro/shuffle-bound queries, SCALE.md r16)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "8")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.start(Session.builder(4).appName("graft-test"))
+}
+
+object SparkSpec {
+  /** Stop `s` and forget it, so the next suite builds its own session. */
+  def release(s: SparkSession): Unit = {
+    s.stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+  }
 }
