@@ -479,18 +479,21 @@ object Queries {
     * (results are partitioning-invariant — the correctness gate re-checks
     * that) and the session setting is restored for the batch stages. A
     * real deployment sizes this with state volume instead. */
-  private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    // NB restore must distinguish "explicitly set" from "default":
-    // conf.get/getOption return the DEFAULT for never-set keys, so a
-    // naive save/restore writes the default back as an explicit session
-    // entry (caught by PlanAuditSpec's conf-leak audit). getAll lists
-    // only explicit entries.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getAll.get(key)
-    s.conf.set(key, n.toString)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+  private def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s)("spark.sql.shuffle.partitions" -> n.toString)(body)
+
+  /** Run `body` with the session confs `kvs` set, then put every key back
+    * as it was. The restore must tell "explicitly set" from "default":
+    * conf.get/getOption return the DEFAULT for a never-set key, so a naive
+    * save/restore writes the default back as an explicit session entry
+    * (caught by PlanAuditSpec's conf-leak audit). getAll lists only
+    * explicit entries, and a key it lacked is unset again. */
+  private def withConf[T](s: SparkSession)(kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getAll.get(k) }
+    try { kvs.foreach { case (k, v) => s.conf.set(k, v) }; body }
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -505,29 +508,14 @@ object Queries {
     * → 1.91 s, s22 2.42 → 1.83 s with the floor back). Scoping it here
     * — the wrapper exactly the 20 streaming queries drain under — keeps
     * the iterative family on the retired-floor plan. Both settings are
-    * scoped and restored like [[withStreamPartitions]] so nothing leaks
-    * into whatever the session runs next. */
-  private def withNoEmptyBatches[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val keyF = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
-    // getAll, not getOption: see withStreamPartitions — getOption would
-    // report the default (true) for a never-set key and the restore would
-    // then pin it explicitly.
-    val prev = s.conf.getAll.get(key)
-    val prevF = s.conf.getAll.get(keyF)
-    s.conf.set(key, "false")
-    s.conf.set(keyF, "8")
-    try body finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      prevF match {
-        case Some(v) => s.conf.set(keyF, v)
-        case None => s.conf.unset(keyF)
-      }
-    }
-  }
+    * scoped by [[withConf]] so nothing leaks into whatever the session
+    * runs next. The floor's key is named through SQLConf (Spark 4.1 marks
+    * it deprecated), so a Spark that drops it fails the build instead of
+    * silently dropping the floor. */
+  private def withNoEmptyBatches[T](s: SparkSession)(body: => T): T =
+    withConf(s)(
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM.key -> "8")(body)
 
   // ==========================================================================
   // Relational operators (SURVEY §2.2-2.8) over the TPC-H-ish tables
@@ -2320,7 +2308,7 @@ object Queries {
     // leave footprint squares at pixel offsets {0,128}, and the oracle
     // recomputes per-chunk tile counts and sparse-rect pixel sums from
     // that geometry. Pixel values are covered by TileSourceV2Spec's
-    // equality test against the mapPartitions scan.
+    // equality test against TileScan.scan.
     Q("r5_dsv2_pruned",
       (s, _) => {
         import s.implicits._
@@ -5623,10 +5611,10 @@ object Queries {
     // ----- P10/S7: the reader-table OPEN-ONCE invariant, oracle-gated.
     // 20 assets share 7 distinct urls and every (asset x chunk) row lands
     // in the single chunk (0,0) — one partition key, so ONE task under
-    // ANY parallelism (repartition hashes (yChunk,xChunk); a single key
-    // maps to a single partition whatever nPart is — this is what makes
-    // the count engine-deterministic and the A/B parallelism-invariant).
-    // The per-task reader cache (ReaderCache, shared by both scans, S7) must
+    // ANY parallelism (the scan has one input partition per chunk — this
+    // is what makes the count engine-deterministic and the A/B
+    // parallelism-invariant).
+    // The per-task reader cache (ReaderCache, S7) must
     // therefore construct exactly count(DISTINCT url) = 7 readers for 20
     // work rows — without the cache this reads 20. A LongAccumulator in
     // readerFor observes the opens; RampReader's closed-form pixels give
@@ -12751,7 +12739,7 @@ object Queries {
 
     // ----- J14: STORAGE-PARTITIONED band align — j13's layout thesis
     // applied to the engine's own raster core. TileAlgebra.binary over
-    // the mapPartitions scan shuffles BOTH tile sides on
+    // an unpartitioned tile source shuffles BOTH tile sides on
     // (itemIdx, yChunk, xChunk) — at 100 TB, two corpus-sized Exchanges
     // per NDVI. binaryAligned instead cogroups two TileSourceV2 scans on
     // EXACTLY their advertised partition keys (KeyGroupedPartitioning on
@@ -12786,13 +12774,7 @@ object Queries {
         // exchanges are visible without an action; broadcast is disabled
         // for the window so a tiny-side BHJ can't mask an SPJ regression
         // (the SMJ count pins the join shape).
-        // getAll, not get/getOption: both resolve an unset key to its
-        // registered DEFAULT, and restoring that default with set()
-        // materializes the conf in the session (a leak the scoped-conf
-        // audit rightly flags); getAll carries only explicit entries.
-        val prev = s.conf.getAll.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val zipped = try {
+        val zipped = withConf(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
           val z = TileAlgebra.binaryAligned(nir, red, 50, 50, "q")(
             (n, r) => n * 1000.0 + r)
           val plan = z.queryExecution.executedPlan
@@ -12802,9 +12784,6 @@ object Queries {
             "j14: the storage-partitioned band align planned a shuffle — " +
             s"KeyGroupedPartitioning was not honored:\n$plan")
           z.localCheckpoint(true) // materializes inside the conf window
-        } finally prev match {
-          case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-          case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         }
         zipped.flatMap { t =>
           for {
@@ -14610,9 +14589,7 @@ object Queries {
         ExactSubstr.saveHashIndexBucketed(
           ExactSubstr.buildHashIndex(tr, "text", lengths),
           "graft_x54_idx", pdir.resolve("gram_index").toString)
-        val prev = s.conf.getAll.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
+        try withConf(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
           val screened = ExactSubstr.screenBatchBucketed(
             s, "graft_x54_idx", ev, "text", "doc_id", lengths)
           // assert on the JOIN subtree (pre-agg): the index side must
@@ -14640,10 +14617,6 @@ object Queries {
             s"was not honored:\n$plan")
           screened.orderBy($"gram_len").localCheckpoint(true)
         } finally {
-          prev match {
-            case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-            case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-          }
           // the screen result is checkpointed above, so the on-disk index
           // can go now — deleteOnExit only removes EMPTY directories, and
           // a fresh parquet copy per bench/verify pass would otherwise
@@ -14701,9 +14674,7 @@ object Queries {
           "graft_x55_idx", pdir.resolve("gram_index").toString)
         ExactSubstr.appendHashIndexBucketed(trInc, "text", "graft_x55_idx",
           lengths)
-        val prev = s.conf.getAll.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
+        try withConf(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
           val screened = ExactSubstr.screenBatchBucketed(
             s, "graft_x55_idx", ev, "text", "doc_id", lengths)
           // the x54 plan assert, now against the APPENDED table: one
@@ -14725,10 +14696,6 @@ object Queries {
             s"bucketing was not honored after append:\n$plan")
           screened.orderBy($"gram_len").localCheckpoint(true)
         } finally {
-          prev match {
-            case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-            case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-          }
           s.sql("DROP TABLE IF EXISTS graft_x55_idx")
           deleteRecursively(pdir)
         }

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import graft.core.RasterSpec
 import graft.ops.{CompositeTile, Median, Mosaic, Pixels, Reproject, Resampling, TileAlgebra}
 import graft.scan.{AssetRow, ErrorsAsNodata, FakeReader, Reader, Tile, TileScan}
-import graft.stac.{Prepare, PrepareOptions, StacItem}
+import graft.stac.{Prepare, PrepareOptions, PrepareResult, StacItem}
 
 /** The user-facing entry point — the analog of `stackstac.stack(...)`
   * (`stackstac/stack.py:26-326`): items in, a lazy raster stack out, with
@@ -132,12 +132,8 @@ object Stack {
             opts: PrepareOptions = PrepareOptions(),
             chunk: Int = 1024,
             readerFor: RasterSpec => AssetRow => Reader = _ => a => FakeReader(a.url),
-            errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack = {
-    val plan = Prepare(items, opts)
-    val tiles = TileScan.scan(spark, plan.assetTable, plan.spec, chunk,
-      readerFor(plan.spec), errorsAsNodata)
-    Stack(spark, tiles, plan.spec, chunk, plan.items, plan.assetTable)
-  }
+            errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack =
+    build(spark, items, opts, errorsAsNodata, elide = true)(_ => chunk, p => readerFor(p.spec))
 
   /** `stack(chunksize=...)` parity: accept the full chunk-spec grammar
     * ("auto", "64 MiB", -1, ints — `to_dask.py:208-231`) and resolve it
@@ -147,39 +143,22 @@ object Stack {
               chunks: graft.scan.ChunksParam,
               opts: PrepareOptions = PrepareOptions(),
               readerFor: RasterSpec => AssetRow => Reader = _ => a => FakeReader(a.url),
-              errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack = {
-    val plan = Prepare(items, opts)
-    val (cy, cx) = graft.scan.Chunks.spatialEdges(chunks, plan.spec)
-    val edge = math.min(cy, cx)
-    val tiles = TileScan.scan(spark, plan.assetTable, plan.spec, edge,
-      readerFor(plan.spec), errorsAsNodata)
-    Stack(spark, tiles, plan.spec, edge, plan.items, plan.assetTable)
-  }
+              errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack =
+    build(spark, items, opts, errorsAsNodata, elide = true)(
+      spec => { val (cy, cx) = graft.scan.Chunks.spatialEdges(chunks, spec); math.min(cy, cx) },
+      p => readerFor(p.spec))
 
-  /** DSv2-backed stack — same API, same `Dataset[Tile]`, but the tiles
-    * come from [[graft.scan.v2.TileSourceV2]], whose reported
-    * KeyGroupedPartitioning (one partition per chunk) survives the
-    * typed filters and makes [[Stack.algebra]]'s band-align join a
-    * STORAGE-PARTITIONED join — zero Exchange on either side (the
-    * TileAlgebra.binaryAligned plan, SpjSpec/j14; needs the
-    * `requireAllClusterKeysForCoPartition=false` session conf that
-    * [[graft.Session]] sets). Semantics difference vs [[apply]], stated
-    * plainly: the V2 scan does NOT elide all-nodata tiles (the DSv2
-    * row-set contract — pruning must be a pure optimization), so a
-    * chunk whose every tile is all-NaN yields an all-NaN composite
-    * where the legacy scan would yield no tile; every NaN-skipping
-    * reduction downstream is unaffected. */
+  /** [[apply]] without the all-NaN elision: the tiles are the plain
+    * [[graft.scan.v2.TileSourceV2]] rows, one per planned read (the DSv2
+    * row-set contract — pruning must be a pure optimization). Both scans
+    * report one partition per chunk, so [[Stack.algebra]]'s band-align
+    * join is storage-partitioned either way (SpjSpec/j14). */
   def v2(spark: SparkSession, items: Seq[StacItem],
          opts: PrepareOptions = PrepareOptions(),
          chunk: Int = 1024,
          readerFor: RasterSpec => AssetRow => Reader = _ => a => FakeReader(a.url),
-         errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack = {
-    val plan = Prepare(items, opts)
-    val tiles = graft.scan.v2.TileSourceV2.scan(spark, plan.assetTable,
-        plan.spec, chunk, readerFor(plan.spec), errorsAsNodata)
-      .as[Tile](org.apache.spark.sql.Encoders.product[Tile])
-    Stack(spark, tiles, plan.spec, chunk, plan.items, plan.assetTable)
-  }
+         errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack =
+    build(spark, items, opts, errorsAsNodata, elide = false)(_ => chunk, p => readerFor(p.spec))
 
   /** Real-file stack over GeoTIFFs, mixed-CRS capable: assets whose
     * native CRS differs from the output spec are warped per pixel at read
@@ -190,10 +169,22 @@ object Stack {
               opts: PrepareOptions = PrepareOptions(),
               chunk: Int = 1024,
               nodata: Option[Double] = None,
-              errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack = {
+              errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): Stack =
+    build(spark, items, opts, errorsAsNodata, elide = true)(_ => chunk,
+      p => graft.scan.GeoTiffReader.warped(p.spec, p.nativeGrids, nodata))
+
+  /** Prepare, resolve the chunk edge and reader against the plan, and
+    * scan: with the all-NaN elision ([[TileScan.scan]]) or without it. */
+  private def build(spark: SparkSession, items: Seq[StacItem], opts: PrepareOptions,
+                    errorsAsNodata: ErrorsAsNodata, elide: Boolean)(
+      edge: RasterSpec => Int, readerFor: PrepareResult => AssetRow => Reader): Stack = {
     val plan = Prepare(items, opts)
-    val tiles = TileScan.scan(spark, plan.assetTable, plan.spec, chunk,
-      graft.scan.GeoTiffReader.warped(plan.spec, plan.nativeGrids, nodata), errorsAsNodata)
+    val chunk = edge(plan.spec)
+    val tiles =
+      if (elide) TileScan.scan(spark, plan.assetTable, plan.spec, chunk,
+        readerFor(plan), errorsAsNodata)
+      else graft.scan.v2.TileSourceV2.scan(spark, plan.assetTable, plan.spec, chunk,
+        readerFor(plan), errorsAsNodata).as[Tile](Encoders.product[Tile])
     Stack(spark, tiles, plan.spec, chunk, plan.items, plan.assetTable)
   }
 }

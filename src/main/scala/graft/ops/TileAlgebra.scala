@@ -47,10 +47,11 @@ object TileAlgebra {
 
   /** STORAGE-PARTITIONED binary combine — [[binary]]'s semantics with
     * ZERO Exchange on either side, for tile frames sourced from
-    * [[graft.scan.v2.TileSourceV2]]. `binary` over the `mapPartitions`
-    * scan shuffles BOTH full tile sides on (itemIdx, yChunk, xChunk);
-    * at 100 TB that is two corpus-sized Exchanges for every NDVI. The V2
-    * scan instead ADVERTISES its native clustering — one input partition
+    * [[graft.scan.v2.TileSourceV2]] (so also from [[TileScan.scan]]).
+    * `binary` over a source without reported partitioning shuffles BOTH
+    * full tile sides on (itemIdx, yChunk, xChunk); at 100 TB that is two
+    * corpus-sized Exchanges for every NDVI. The V2 scan instead
+    * ADVERTISES its native clustering — one input partition
     * per (yChunk, xChunk), `KeyGroupedPartitioning` + `HasPartitionKey`
     * — and Spark's storage-partitioned join (SPARK-37375) lets the same
     * (itemIdx, yChunk, xChunk) SortMergeJoin as [[binary]] run with NO

@@ -5,8 +5,8 @@ import scala.collection.mutable
 import graft.core.Window
 
 /** One planned (asset × chunk) read of the work-list: the asset's window
-  * clamped to the grid and cut at chunk (`yChunk`, `xChunk`). Both tile
-  * scans plan with it ([[TileScan.workList]]) and read it through one
+  * clamped to the grid and cut at chunk (`yChunk`, `xChunk`). The tile
+  * scan plans with it ([[TileScan.workList]]) and reads it through one
   * [[ReaderCache]]. */
 final case class PlannedRead(asset: AssetRow, yChunk: Int, xChunk: Int, window: Window) {
   /** The read window's offset from its chunk's origin. */
@@ -30,12 +30,13 @@ final case class PlannedRead(asset: AssetRow, yChunk: Int, xChunk: Int, window: 
   }
 }
 
-/** The one read body of both tile scans, one instance per task: each URL
+/** The one read body of the tile scan, one instance per task: each URL
   * is opened at most once (the reference enforces this with dask
   * fusion-blocking, R7 `to_dask.py:65-69`), a read whose error matches
   * `errorsAsNodata` becomes an all-NaN window (`nodata_reader.py:46-64`),
-  * and the asset's scale/offset is applied. The owner calls [[close]]
-  * when its task ends — file-backed readers hold fds. */
+  * and the asset's scale/offset is applied. Its owner, the v2 source's
+  * partition reader, calls [[close]] when its task ends — file-backed
+  * readers hold fds. */
 final class ReaderCache(readerFor: AssetRow => Reader, errorsAsNodata: ErrorsAsNodata) {
   private val open = mutable.HashMap.empty[String, Reader]
 

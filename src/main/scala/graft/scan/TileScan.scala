@@ -1,6 +1,7 @@
 package graft.scan
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, exists, isnan}
 import graft.core.{Bounds, RasterSpec, Window}
 
 /** One row of the planned scan list — the exploded (tidy) form of the
@@ -54,22 +55,16 @@ object TileScan {
     }
   }
 
-  /** Build the lazy tile Dataset: (asset × chunk) pairs that spatially
-    * overlap (J2+J3 in SURVEY §2.3), partitioned by spatial chunk, read
-    * via `mapPartitions`. Planning is metadata-only (reference R5): no
-    * pixel IO happens until an action runs.
+  /** Build the lazy tile Dataset: the [[v2.TileSourceV2]] scan of the
+    * (asset × chunk) pairs that spatially overlap (J2+J3 in SURVEY §2.3),
+    * one partition per spatial chunk, with every all-NaN tile dropped
+    * (sparse elision, reference R4). Planning is metadata-only
+    * (reference R5): no pixel IO happens until an action runs.
     *
-    * The driver ships only the planned assets (non-null `url`); each
-    * asset is expanded into its overlapping chunks by [[pairsOf]] inside
-    * the scan's tasks, so the plan holds one row per asset, not one per
-    * pair. The partition count comes from the closed-form pair count, so
-    * partitioning and chunk placement equal those of the driver-side
-    * [[workList]].
-    *
-    * Each task reads through one [[ReaderCache]], the read body it shares
-    * with the v2 source; Spark's process-per-task model replaces the
-    * reference's thread-local GDAL dataset machinery
-    * (`rio_reader.py:124-265`).
+    * The elision is a filter above the source, not a source option: the
+    * source keeps its no-elision row set, and Spark pushes neither COUNT
+    * nor LIMIT through the filter, so `count()` and `limit(n)` see only
+    * non-empty tiles and column pruning always keeps `pixels`.
     */
   def scan(
       spark: SparkSession,
@@ -88,34 +83,10 @@ object TileScan {
       spec: RasterSpec,
       chunkY: Int, chunkX: Int,
       readerFor: AssetRow => Reader,
-      errorsAsNodata: ErrorsAsNodata): Dataset[Tile] = {
-    import spark.implicits._
-
-    val planned = assets.filter(_.url != null)
-    val nPairs = planned.iterator.map { a =>
-      val (_, ys, xs) = overlap(a, spec, chunkY, chunkX)
-      ys.size.toLong * xs.size
-    }.sum
-
-    val nPart = math.max(1L, math.min(nPairs, spark.sparkContext.defaultParallelism * 2L)).toInt
-    spark.createDataset(planned)
-      .flatMap(a => pairsOf(a, spec, chunkY, chunkX))
-      .repartition(nPart, $"yChunk", $"xChunk") // co-locate by chunk for downstream per-chunk aggs
-      .mapPartitions { it =>
-        val reads = new ReaderCache(readerFor, errorsAsNodata)
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => reads.close()))
-        it.flatMap { r =>
-          val px = reads.read(r)
-          // Sparse elision (R4): an all-nodata read produces no row.
-          if (px.forall(_.isNaN)) Iterator.empty
-          else Iterator.single(Tile(
-            r.asset.itemIdx, r.asset.assetIdx, r.asset.band, r.asset.timeMicros,
-            r.yChunk, r.xChunk, r.rowOff(chunkY), r.colOff(chunkX),
-            r.window.height, r.window.width, px))
-        }
-      }
-  }
+      errorsAsNodata: ErrorsAsNodata): Dataset[Tile] =
+    v2.TileSourceV2.load(spark, v2.ScanPlan(assets, spec, chunkY, chunkX, readerFor, errorsAsNodata))
+      .where(exists(col("pixels"), p => !isnan(p)))
+      .as[Tile](Encoders.product[Tile])
 
   /** Metadata-only (asset × chunk) work-list, driver side (like prepare:
     * reference scale is 1e2..1e5 assets — tiny vs the pixel data). Only
@@ -123,9 +94,9 @@ object TileScan {
     * `to_dask.py:183-189`). The work-list is enumerated per asset by
     * [[pairsOf]] — O(assets × overlap), not O(assets × total-chunks): a
     * 1e6-asset plan over a 1e5-chunk grid stays a driver-side metadata
-    * pass, never 1e11 intersection tests. [[scan]] runs the same
-    * enumeration inside its tasks, and the v2 source plans its reads and
-    * answers pushed aggregates from this list.
+    * pass, never 1e11 intersection tests. The v2 source, and so
+    * [[scan]], plans its reads and answers pushed aggregates from this
+    * list.
     */
   def workList(assets: Seq[AssetRow], spec: RasterSpec, chunk: Int): Seq[PlannedRead] =
     workList(assets, spec, chunk, chunk)
@@ -137,22 +108,15 @@ object TileScan {
   /** The planned reads of one asset, in row-major chunk order: the asset
     * window clamped to the grid, cut at every chunk it overlaps. Empty
     * when the asset misses the grid. */
-  def pairsOf(a: AssetRow, spec: RasterSpec,
-              chunkY: Int, chunkX: Int): Seq[PlannedRead] = {
-    val (win, ys, xs) = overlap(a, spec, chunkY, chunkX)
-    for (yc <- ys; xc <- xs)
-      yield PlannedRead(a, yc, xc, Window(xc * chunkX, yc * chunkY, chunkX, chunkY).intersect(win))
-  }
-
-  /** An asset's window clamped to the grid, and the row and column chunk
-    * index ranges it overlaps (both empty when it misses the grid). */
-  private def overlap(a: AssetRow, spec: RasterSpec,
-                      chunkY: Int, chunkX: Int): (Window, Range, Range) = {
+  private def pairsOf(a: AssetRow, spec: RasterSpec,
+                      chunkY: Int, chunkX: Int): Seq[PlannedRead] = {
     val (h, w) = spec.shape
     val win = spec.windowFor(a.bounds).intersect(Window(0, 0, w, h))
-    if (win.isEmpty) (win, Range(0, 0), Range(0, 0))
-    else (win, (win.rowOff / chunkY) to ((win.rowEnd - 1) / chunkY),
-          (win.colOff / chunkX) to ((win.colEnd - 1) / chunkX))
+    if (win.isEmpty) Nil
+    else for {
+      yc <- (win.rowOff / chunkY) to ((win.rowEnd - 1) / chunkY)
+      xc <- (win.colOff / chunkX) to ((win.colEnd - 1) / chunkX)
+    } yield PlannedRead(a, yc, xc, Window(xc * chunkX, yc * chunkY, chunkX, chunkY).intersect(win))
   }
 
   /** Expand a sparse tile to the full dense chunk rectangle (fill = NaN).

@@ -28,7 +28,8 @@ import graft.scan.{AssetRow, ErrorsAsNodata, FakeReader, PlannedRead, Reader, Re
 final case class ScanPlan(
     assets: Seq[AssetRow],
     spec: RasterSpec,
-    chunk: Int,
+    chunkY: Int,
+    chunkX: Int,
     readerFor: AssetRow => Reader,
     errorsAsNodata: ErrorsAsNodata)
 
@@ -57,9 +58,8 @@ object TilePlanRegistry {
   }
 }
 
-/** DataSource V2 tile source — the SURVEY §7.3 graduation of
-  * [[graft.scan.TileScan]] from `mapPartitions` to a `PartitionReaderFactory`
-  * with real Catalyst integration:
+/** DataSource V2 tile source — the one tile scan (SURVEY §7.3), a
+  * `PartitionReaderFactory` with real Catalyst integration:
   *
   *  - '''Predicate pushdown''' (`SupportsPushDownFilters`): filters on
   *    `band` / `timeMicros` / `itemIdx` / `yChunk` / `xChunk` prune the
@@ -71,19 +71,17 @@ object TilePlanRegistry {
   *  - '''Column pruning''' (`SupportsPushDownRequiredColumns`): a
   *    projection without `pixels` reads no pixel bytes at all — the
   *    metadata-only planning boundary (R5) expressed in the scan itself.
-  *    The row set is the *planned* work-list in EVERY projection: unlike
-  *    [[TileScan.scan]], all-nodata tiles are NOT elided here, so pruning
-  *    stays a pure optimization (same rows whether or not pixels are
-  *    read — the DSv2 contract). Consumers wanting R4's value-level
-  *    sparsity filter explicitly (e.g. `exists(pixels, p -> NOT isnan(p))`;
-  *    every NaN-skipping aggregate downstream ignores such tiles anyway).
+  *    The row set is the *planned* work-list in EVERY projection:
+  *    all-nodata tiles are NOT elided here, so pruning stays a pure
+  *    optimization (same rows whether or not pixels are read — the DSv2
+  *    contract). R4's value-level sparsity is a filter on top:
+  *    [[TileScan.scan]] is this source under `exists(pixels, p -> NOT isnan(p))`.
   *  - One `InputPartition` per (yChunk, xChunk): downstream per-chunk
   *    aggregations (mosaic, temporal) consume co-located tiles.
   *
   * Planning uses [[TileScan.workList]]'s [[graft.scan.PlannedRead]]s, and
-  * pixels are read through [[graft.scan.ReaderCache]], the one read body
-  * (open-once, errors-as-nodata, scale/offset) shared with
-  * [[TileScan.scan]].
+  * pixels are read through [[graft.scan.ReaderCache]] (open-once,
+  * errors-as-nodata, scale/offset), one per input partition.
   *
   * Usage: `TileSourceV2.scan(spark, assets, spec, chunk, ...)` or
   * `spark.read.format(classOf[TileSourceProvider].getName).option("plan", token).load()`.
@@ -109,11 +107,14 @@ object TileSourceV2 {
       spec: RasterSpec,
       chunk: Int = 1024,
       readerFor: AssetRow => Reader = a => FakeReader(a.url),
-      errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): DataFrame = {
-    val token = TilePlanRegistry.register(ScanPlan(assets, spec, chunk, readerFor, errorsAsNodata))
+      errorsAsNodata: ErrorsAsNodata = ErrorsAsNodata.none): DataFrame =
+    load(spark, ScanPlan(assets, spec, chunk, chunk, readerFor, errorsAsNodata))
+
+  /** The scan of any plan, square or rectangular chunks — what
+    * [[TileScan.scan]]'s rectangular overload reads through. */
+  private[scan] def load(spark: SparkSession, plan: ScanPlan): DataFrame =
     spark.read.format(classOf[TileSourceProvider].getName)
-      .option("plan", token).load()
-  }
+      .option("plan", TilePlanRegistry.register(plan)).load()
 }
 
 class TileSourceProvider extends TableProvider
@@ -252,12 +253,12 @@ final class TileAggScanV2(
       case m: Max => fieldOf(m.column).name
     }.distinct
     for {
-      r <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
-      if pushed.forall(TileFilterEval.eval(_, r, plan.chunk))
+      r <- TileScan.workList(plan.assets, plan.spec, plan.chunkY, plan.chunkX)
+      if pushed.forall(TileFilterEval.eval(_, r, plan.chunkY, plan.chunkX))
     } {
       count += 1
       neededCols.foreach { c =>
-        val v = r.meta(c, plan.chunk, plan.chunk)
+        val v = r.meta(c, plan.chunkY, plan.chunkX)
         if (!mins.contains(c) || lt(v, mins(c))) mins(c) = v
         if (!maxs.contains(c) || lt(maxs(c), v)) maxs(c) = v
       }
@@ -326,18 +327,18 @@ private[v2] object TileFilterEval {
     case _ => 0
   }
 
-  /** Does planned read `r` (of a scan with square `chunk` edges) pass `f`? */
-  def eval(f: Filter, r: PlannedRead, chunk: Int): Boolean = {
-    def value(c: String): Any = r.meta(c, chunk, chunk)
+  /** Does planned read `r` (of a scan with `chunkY` × `chunkX` chunks) pass `f`? */
+  def eval(f: Filter, r: PlannedRead, chunkY: Int, chunkX: Int): Boolean = {
+    def value(c: String): Any = r.meta(c, chunkY, chunkX)
     f match {
       case EqualTo(c, v) => value(c) == v || cmp(value(c), v) == 0
-      case In(c, vs) => vs.exists(v => eval(EqualTo(c, v), r, chunk))
+      case In(c, vs) => vs.exists(v => eval(EqualTo(c, v), r, chunkY, chunkX))
       case GreaterThan(c, v) => cmp(value(c), v) > 0
       case GreaterThanOrEqual(c, v) => cmp(value(c), v) >= 0
       case LessThan(c, v) => cmp(value(c), v) < 0
       case LessThanOrEqual(c, v) => cmp(value(c), v) <= 0
-      case And(a, b) => eval(a, r, chunk) && eval(b, r, chunk)
-      case Or(a, b) => eval(a, r, chunk) || eval(b, r, chunk)
+      case And(a, b) => eval(a, r, chunkY, chunkX) && eval(b, r, chunkY, chunkX)
+      case Or(a, b) => eval(a, r, chunkY, chunkX) || eval(b, r, chunkY, chunkX)
       case _ => true
     }
   }
@@ -394,7 +395,7 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
   }
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft_tiles chunk=${plan.chunk} pushed=[${pushed.mkString(", ")}]" +
+    s"graft_tiles chunk=${plan.chunkY}x${plan.chunkX} pushed=[${pushed.mkString(", ")}]" +
       (if (limit >= 0) s" LIMIT-PUSHDOWN $limit" else "")
 
   private lazy val partitions = computePartitions()
@@ -432,7 +433,7 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
     if (runtime.isEmpty) parts
     else parts.map { p =>
       val tp = p.asInstanceOf[TileInputPartition]
-      tp.copy(reads = tp.reads.filter(r => runtime.forall(TileFilterEval.eval(_, r, plan.chunk))))
+      tp.copy(reads = tp.reads.filter(r => runtime.forall(TileFilterEval.eval(_, r, plan.chunkY, plan.chunkX))))
     }
 
   /** Advertise the scan's NATIVE clustering: one input partition per
@@ -464,8 +465,8 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
     // pushed predicates applied before any IO is scheduled (R1/R2)
     val byChunk = mutable.LinkedHashMap.empty[(Int, Int), mutable.ArrayBuffer[PlannedRead]]
     for {
-      r <- TileScan.workList(plan.assets, plan.spec, plan.chunk)
-      if pushed.forall(TileFilterEval.eval(_, r, plan.chunk))
+      r <- TileScan.workList(plan.assets, plan.spec, plan.chunkY, plan.chunkX)
+      if pushed.forall(TileFilterEval.eval(_, r, plan.chunkY, plan.chunkX))
     } byChunk.getOrElseUpdate((r.yChunk, r.xChunk), mutable.ArrayBuffer.empty) += r
     val parts = byChunk.map { case ((yc, xc), rs) =>
       TileInputPartition(yc, xc, rs.toArray): InputPartition
@@ -482,7 +483,8 @@ final class TileScanV2(plan: ScanPlan, pushed: Array[Filter], required: StructTy
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    TileReaderFactory(plan.chunk, plan.readerFor, plan.errorsAsNodata, required.fieldNames)
+    TileReaderFactory(plan.chunkY, plan.chunkX, plan.readerFor, plan.errorsAsNodata,
+      required.fieldNames)
 }
 
 final case class TileInputPartition(yChunk: Int, xChunk: Int, reads: Array[PlannedRead])
@@ -497,20 +499,22 @@ final case class TileInputPartition(yChunk: Int, xChunk: Int, reads: Array[Plann
 }
 
 final case class TileReaderFactory(
-    chunk: Int,
+    chunkY: Int,
+    chunkX: Int,
     readerFor: AssetRow => Reader,
     errorsAsNodata: ErrorsAsNodata,
     fieldNames: Array[String]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TilePartitionReader(partition.asInstanceOf[TileInputPartition].reads,
-      chunk, new ReaderCache(readerFor, errorsAsNodata), fieldNames)
+      chunkY, chunkX, new ReaderCache(readerFor, errorsAsNodata), fieldNames)
 }
 
 /** Emits one row per planned read, reading pixels through the scan's
   * shared [[ReaderCache]] only when the projection keeps `pixels`. */
 final class TilePartitionReader(
     reads: Array[PlannedRead],
-    chunk: Int,
+    chunkY: Int,
+    chunkX: Int,
     cache: ReaderCache,
     fieldNames: Array[String]) extends PartitionReader[InternalRow] {
 
@@ -524,15 +528,15 @@ final class TilePartitionReader(
     val r = reads(i)
     // column pruning => zero pixel IO, no reader opened (R5)
     val px = if (needPixels) cache.read(r) else null
-    // NO value-based elision here (unlike TileScan.scan): the row set must
-    // be identical under every projection, or `count()` and a pixel
-    // aggregate over the same source would disagree (DSv2 requires
-    // pruning to be a pure optimization). All-nodata tiles flow through;
-    // consumers filter them explicitly if they want R4 sparsity.
+    // NO value-based elision here: the row set must be identical under
+    // every projection, or `count()` and a pixel aggregate over the same
+    // source would disagree (DSv2 requires pruning to be a pure
+    // optimization). All-nodata tiles flow through; TileScan.scan filters
+    // them above the scan.
     row = new GenericInternalRow(fieldNames.map[Any] {
       case "band" => UTF8String.fromString(r.asset.band)
       case "pixels" => org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(px)
-      case c => r.meta(c, chunk, chunk)
+      case c => r.meta(c, chunkY, chunkX)
     })
     true
   }

@@ -27,9 +27,10 @@ object ReaderLifecycle {
     a => if (a.url == bad) BoomReader() else FakeReader(a.url)
 }
 
-/** Both tile scans read through one [[ReaderCache]]: the same values under
-  * rescale and errors-as-nodata, the same reader lifecycle, and no second
-  * copy of the read body in the sources. */
+/** `TileScan.scan` and the v2 source it filters read through one
+  * [[ReaderCache]]: the same values under rescale and errors-as-nodata, the
+  * same reader lifecycle, and no second copy of the read body in the
+  * sources. */
 class ScanReadSpec extends SparkSpec {
 
   private val spec = RasterSpec(32633, Bounds(0, 0, 640, 640), 10, 10) // 64x64 px
@@ -107,7 +108,7 @@ class ScanReadSpec extends SparkSpec {
     val (o1, c1, n1) = lifecycle(f => TileScan.scan(spark, assets, spec, chunk, f).count())
     assert(n1 == pairs)
     checkOpenOnce(o1, c1)
-    assert(o1.size < pairs) // every task read several chunks of each url
+    assert(o1.size == 16 * 7) // the v2 source's tasks: one per chunk, each reading all 7 urls
 
     val (o2, c2, n2) = lifecycle(f => TileSourceV2.scan(spark, assets, spec, chunk, f)
       .select("pixels").collect().length.toLong)
@@ -134,5 +135,10 @@ class ScanReadSpec extends SparkSpec {
     }
     assert(users.map(_.getName) == Seq("PlannedRead.scala"),
       "errors-as-nodata masking outside ReaderCache: " + users.mkString(", "))
+  }
+
+  test("source guard: ReaderCache is constructed only by the v2 source") {
+    val at = SourceGuard.offenders("src/main/scala/graft", "new ReaderCache(", "TileSourceV2.scala")
+    assert(at.isEmpty, "a second read body owner: " + at.mkString(", "))
   }
 }

@@ -99,12 +99,12 @@ class SpjSpec extends SparkSpec {
 
   test("DEGRADATION: a side that lost its reported partitioning shuffles both sides") {
     noBroadcast {
-      // the legacy mapPartitions scan reports no partitioning, so the
-      // same binary combine pays two full-data Exchanges — the exact
-      // cost binaryAligned's V2 sourcing removes
+      // a round-robin repartition drops the scan's reported chunk
+      // partitioning, so the same binary combine pays two full-data
+      // Exchanges — the exact cost the reported partitioning removes
       val assets = Seq(asset(0, "nir", "fake://nir/0"), asset(0, "red", "fake://red/0"))
       val legacy = TileScan.scan(spark, assets, spec, chunk = 50,
-        readerFor = a => FakeReader(a.url))
+        readerFor = a => FakeReader(a.url)).repartition(4)
       val j = TileAlgebra.binary(
         legacy.filter(_.band == "nir"), legacy.filter(_.band == "red"),
         50, 50, "d")((n, r) => n - r)
@@ -157,11 +157,14 @@ class SpjSpec extends SparkSpec {
       assert(smjs(plan) == 1, s"expected a SortMergeJoin:\n$plan")
       assert(exchanges(plan) == 0,
         s"Stack.v2 algebra must storage-partition its band align:\n$plan")
-      // values equal the legacy stack's algebra
-      val legacy = Stack(spark, items, PrepareOptions(), chunk = 50)
-        .algebra("ndvi", "nir", "red")((n, r) => (n - r) / (n + r))
-        .tiles.collect()
+      // values equal Stack.apply's algebra, which storage-partitions too
+      val applyTiles = Stack(spark, items, PrepareOptions(), chunk = 50)
+        .algebra("ndvi", "nir", "red")((n, r) => (n - r) / (n + r)).tiles
+      val legacy = applyTiles.collect()
         .map(t => (t.itemIdx, t.yChunk, t.xChunk) -> t.pixels.toSeq).toMap
+      assert(exchanges(applyTiles.queryExecution.executedPlan) == 0,
+        s"Stack.apply algebra must storage-partition its band align:\n" +
+          applyTiles.queryExecution.executedPlan)
       val got = rows.map(t => (t.itemIdx, t.yChunk, t.xChunk) -> t.pixels.toSeq).toMap
       assert(got == legacy)
     }

@@ -149,7 +149,6 @@ class TileScanSpec extends SparkSpec with GenChecks {
       t.pixels.map(java.lang.Double.doubleToLongBits).toSeq)
 
   test("scan rows and partitioning equal a driver-side expansion of workList (fuzz)") {
-    val par = spark.sparkContext.defaultParallelism
     val gen = for {
       ni <- Gen.choose(1, 5); nb <- Gen.choose(1, 3)
       assets <- genAssets(ni, nb)
@@ -160,21 +159,44 @@ class TileScanSpec extends SparkSpec with GenChecks {
         a => FakeReader(a.url), ErrorsAsNodata.none)
       val got = ds.collect().toSeq.map(rowKey).groupBy(identity).view.mapValues(_.size).toMap
       assert(got == expandWorkList(assets, cy, cx), s"chunks ($cy, $cx)")
-      val pairs = TileScan.workList(assets, spec, cy, cx).size
-      assert(ds.rdd.getNumPartitions == math.max(1, math.min(pairs, 2 * par)),
-        s"chunks ($cy, $cx): $pairs pairs")
+      // one partition per planned chunk, the v2 source's key grouping
+      val chunks = TileScan.workList(assets, spec, cy, cx).map(r => (r.yChunk, r.xChunk)).distinct
+      assert(ds.rdd.getNumPartitions == chunks.size, s"chunks ($cy, $cx)")
     }
   }
 
-  test("the scan plan ships one row per planned asset, not one per pair") {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+  test("the scan plan is one graft_tiles source scan with no Repartition") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, RepartitionByExpression}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     val assets = edgeAssets :+
       AssetRow(96, 0, "b0", 96L, "fake://96/0", -4, -4, 4, 4, 1.0, 0.0)
-    val pairs = TileScan.workList(assets, spec, 2, 2).size
-    val planned = assets.count(_.url != null)
-    val ds = TileScan.scan(spark, assets, spec, chunk = 2)
-    val rels = ds.queryExecution.analyzed.collect { case r: LocalRelation => r.data.size }
-    assert(rels == Seq(planned), s"$pairs pairs")
-    assert(pairs > 10 * planned)
+    val plan = TileScan.scan(spark, assets, spec, chunk = 2).queryExecution.analyzed
+    assert(plan.collect { case r: DataSourceV2Relation => r.table.name() } == Seq("graft_tiles"))
+    assert(plan.collect {
+      case r: Repartition => r
+      case r: RepartitionByExpression => r
+    }.isEmpty, plan.treeString)
+  }
+
+  /** The first planned read (asset 0, one chunk) fails into an all-NaN
+    * window; asset 1 reads all four chunks. */
+  private val halfEmpty = Seq(
+    AssetRow(0, 0, "b0", 0L, "fake://bad", -4, -4, 0, 0, 1.0, 0.0),
+    AssetRow(1, 0, "b0", 1L, "fake://ok", -4, -4, 4, 4, 1.0, 0.0))
+  private val masked = ErrorsAsNodata(Seq((classOf[RuntimeException], "404")))
+  private val failBad = ReaderLifecycle.failing("fake://bad")
+
+  test("count() counts only non-empty reads: no COUNT pushdown under the elision") {
+    val reads = TileScan.workList(halfEmpty, spec, chunk)
+    val nonEmpty = reads.count(_.asset.url != "fake://bad")
+    assert(reads.head.asset.url == "fake://bad" && nonEmpty < reads.size)
+    assert(TileScan.scan(spark, halfEmpty, spec, chunk, failBad, masked).count() == nonEmpty)
+  }
+
+  test("limit(n) returns n non-empty tiles when the first planned read is all-NaN") {
+    assert(TileScan.workList(halfEmpty, spec, chunk).head.asset.url == "fake://bad")
+    val got = TileScan.scan(spark, halfEmpty, spec, chunk, failBad, masked).limit(2).collect()
+    assert(got.length == 2)
+    got.foreach(t => assert(t.itemIdx == 1 && t.pixels.exists(!_.isNaN)))
   }
 }

@@ -179,7 +179,7 @@ class TileSourceV2Spec extends SparkSpec {
   test("runtime filtering prunes reads but preserves partition count and keys") {
     import graft.scan.v2._
     import org.apache.spark.sql.sources.In
-    val plan = ScanPlan(assets, spec, chunk, a => FakeReader(a.url), ErrorsAsNodata.none)
+    val plan = ScanPlan(assets, spec, chunk, chunk, a => FakeReader(a.url), ErrorsAsNodata.none)
     val scan = new TileScanBuilder(plan).build()
     val before = scan.toBatch.planInputPartitions()
       .map(_.asInstanceOf[TileInputPartition])
@@ -333,7 +333,7 @@ class TileSourceV2Spec extends SparkSpec {
           if (rnd.nextInt(6) == 0) null else s"fake://$trial/$k",
           x0, y0, x0 + w, y0 + h, 1.0, 0.0)
       }
-      val plan = ScanPlan(as, spec, ch, a => FakeReader(a.url), ErrorsAsNodata.none)
+      val plan = ScanPlan(as, spec, ch, ch, a => FakeReader(a.url), ErrorsAsNodata.none)
       for (((pushed, keep), fi) <- filterCases.zipWithIndex) {
         val want = crossProduct(as, ch, keep)
         planned += want.size
