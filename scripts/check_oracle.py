@@ -14,14 +14,22 @@ the way a pandas round trip would see them: NaN and NULL are one missing
 value, DECIMAL and HUGEINT compare as DOUBLE, timestamps compare at
 microsecond precision. Each query gets its own in-memory database, so
 the memory a heavy oracle (the recursive-CTE ring replays) takes is
-released before the next query runs.
+released before the next query runs, and each database is bounded:
+DUCKDB_THREADS worker threads and a DUCKDB_MEMORY_LIMIT buffer pool that
+spills to a temporary directory under <verify_out_dir>, removed at exit.
 This script is verification tooling only — the library itself never
 uses Python.
 """
-import json, sys, glob, os
+import json, sys, glob, os, tempfile
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# DuckDB's default is every core and 80% of RAM. The limit counts
+# allocated blocks, not touched pages: r51/r52 fail at 2 GB / 4 GB while
+# their RSS stays under 1 GB, and r47 runs ~3.6 GB past a 4 GB limit in
+# RSS, so it bounds the other queries, not the peak.
+DUCKDB_THREADS = 2
+DUCKDB_MEMORY_LIMIT = "8GB"
 
 
 def canon(col: str, typ: str) -> str:
@@ -84,7 +92,24 @@ def check(con, name: str, files, sql: str) -> bool:
     return True
 
 
+def connect(sfdir: str, tmp: str):
+    """A fresh in-memory database with the testdata tables as views."""
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    con.execute(f"SET threads = {DUCKDB_THREADS}")
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory = '{tmp}'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+    return con
+
+
 def main(outdir, sfdir):
+    with tempfile.TemporaryDirectory(prefix=".duckdb_tmp_", dir=outdir) as tmp:
+        return run(outdir, sfdir, tmp)
+
+
+def run(outdir, sfdir, tmp):
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
     qdirs = sorted(d for d in glob.glob(os.path.join(outdir, "*")) if os.path.isdir(d))
     n_pass = n_fail = n_noracle = 0
@@ -98,10 +123,7 @@ def main(outdir, sfdir):
             print(f"-- {name}: no oracle (rows-only): {rows} rows")
             n_noracle += 1
             continue
-        con = duckdb.connect()
-        con.execute("SET TimeZone = 'UTC'")
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
+        con = connect(sfdir, tmp)
         try:
             ok = check(con, name, files, oracle[name])
         finally:

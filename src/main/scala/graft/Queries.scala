@@ -7811,11 +7811,11 @@ object Queries {
     // centroids, SQ8 grid, and encoded postings are built batch-side;
     // query embeddings arrive on a stream, are quantized + SQ8-encoded
     // map-side (pure projections off plan literals — no window, no
-    // shuffle on the stream), routed to their cell by Ann.assign's
-    // literal-centroid path (map-only codegen argmin — the reason the
-    // k<=64 literal path exists), and probe-1 equi-joined against the
-    // static postings on cid, so each micro-batch touches ~batch x
-    // n/kCells candidates, never the corpus. The only streaming state is
+    // shuffle on the stream), routed to their cell by Ann.assign (the
+    // L2 kernel's argmin over the centroid literal — a map-only
+    // projection, so a stream needs no join per batch), and probe-1
+    // equi-joined against the static postings on cid, so each
+    // micro-batch touches ~batch x n/kCells candidates, never the corpus. The only streaming state is
     // one (d2c, nid) min-struct per query (complete mode). The oracle
     // replays coarse training -> assignment -> grid -> codes -> own-cell
     // scan -> (d2c, nid) nearest neighbor in exact integers.

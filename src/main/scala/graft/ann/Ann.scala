@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions
+import org.apache.spark.sql.graftx.GraftExpr
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`), built on exact integer quantization so scores are
@@ -103,55 +104,39 @@ object Ann {
     * L2 assignment with (dist, cid) tiebreak, integer-rounded centroid
     * updates (floor(sum/n + 0.5) — both engines divide the same integers
     * in double), init from the k smallest ids, and a FIXED iteration
-    * count (no data-dependent convergence test). Each round is one
-    * broadcast join against the k×dim centroid table plus one groupBy —
-    * shuffle volume is O(rows), never O(rows²); empty clusters keep their
-    * previous centroid. Returns the assignment under the FINAL centroids:
-    * (cid, cv, id). */
-  def kmeans(prepared: DataFrame, k: Int, iters: Int): DataFrame =
-    if (k <= maxLiteralCentroids) kmeansLiteral(prepared, k, iters)
-    else kmeansJoin(prepared, k, iters)
-
-  /** Above this k, the per-row argmin expression stops being a sane
-    * codegen unit and the join-based path takes over. */
-  private val maxLiteralCentroids = 64
-
-  /** The k ≤ 64 path: the centroid table lives on the DRIVER (k×dim
-    * longs, KBs — the same bounded-model discipline as the BPE merge
-    * table) and assignment is a pure codegen PROJECTION — argmin over k
-    * literal (d2, cid) structs, |q−c|² expanded so q·c runs through the
-    * codegen'd DotLong kernel. Each Lloyd round is then ONE single-stage
-    * job: scan → project cid → map-side-combined k-row census. Nothing
-    * data-sized ever shuffles — the round-8 form shuffled the whole
-    * corpus (vectors included) through a groupBy(id) argmin per round,
-    * which at 100 TB is iters extra corpus-wide shuffles for literally
-    * the same integers. A literal in the plan IS the broadcast. */
-  private def kmeansLiteral(prepared: DataFrame, k: Int, iters: Int): DataFrame = {
-    val vecs = prepared.select(col("id"), col("qv"),
-      GraftFunctions.dot_long(col("qv"), col("qv")).as("nq"))
-    val cents = trainLiteral(vecs, k, iters)
-    val cvLit = typedLit(cents.sortBy(_._1).map(_._2))
-    vecs.withColumn("m", argminLiteral(cents))
-      .select(col("m.cid").as("cid"),
-        element_at(cvLit, col("m.cid") + 1).as("cv"), col("id"))
+    * count (no data-dependent convergence test). The centroid table lives
+    * on the DRIVER (k×dim longs — the bounded-model discipline of the BPE
+    * merge table) and rides into the plan as ONE array literal that the
+    * L2 kernel probes per row ([[nearestCid]]): each Lloyd round is one
+    * single-stage job — scan → project cid → map-side-combined k-row
+    * census — for any k. Nothing data-sized ever shuffles, no join is
+    * planned, and since the model is data rather than code, a new round
+    * or a new dataset reuses the compiled classes. Empty clusters keep
+    * their previous centroid. Returns the assignment under the FINAL
+    * centroids: (cid, cv, id). */
+  def kmeans(prepared: DataFrame, k: Int, iters: Int): DataFrame = {
+    val cents = train(prepared, k, iters)
+    val cvLit = typedLit(cents.map(_._2))
+    prepared.select(col("id"), nearestCid(col("qv"), cents).as("cid"))
+      .select(col("cid"), element_at(cvLit, col("cid") + 1).as("cv"), col("id"))
   }
 
-  /** Lloyd training loop of the literal path; returns the final driver-
-    * side centroid seq. `vecs` must carry (id, qv, nq). */
-  private def trainLiteral(vecs: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Long])] = {
+  /** Lloyd training loop; returns the final driver-side centroids, cids
+    * 0 until k in init order. */
+  private def train(prepared: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Long])] = {
     // init from the k smallest ids (same construction the SQL replay
     // writes); collect is k rows by contract. orderBy+limit+collect
     // returns rows already id-sorted (TakeOrderedAndProject), so the
     // ordering works for ANY orderable id type — no materialized Long id
     // (round-9 advice: the old sortBy(getLong) broke string-id callers).
-    var cents: Seq[(Int, Seq[Long])] = vecs.orderBy(col("id")).limit(k)
+    var cents: Seq[(Int, Seq[Long])] = prepared.orderBy(col("id")).limit(k)
       .select(col("qv")).collect()
       .zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Long](0)) }.toSeq
     var it = 0
     while (it < iters) {
-      val census = vecs.withColumn("m", argminLiteral(cents))
-        .groupBy(col("m.cid").as("cid"))
+      val census = prepared.select(nearestCid(col("qv"), cents).as("cid"), col("qv"))
+        .groupBy(col("cid"))
         .agg(count(lit(1)).as("n"),
              graft.sketch.VectorAgg.vectorSum(col("qv")).as("vs"))
         .collect() // k rows
@@ -173,63 +158,27 @@ object Ann {
   /** The trained coarse-quantizer MODEL alone: (cid, cv), k rows — what
     * an index stores so later batches can [[assign]] without retraining
     * (the v8 admission story) and what [[ivfPq]] composes with. */
-  def kmeansCentroids(prepared: DataFrame, k: Int, iters: Int): DataFrame =
-    if (k <= maxLiteralCentroids) {
-      val vecs = prepared.select(col("id"), col("qv"),
-        GraftFunctions.dot_long(col("qv"), col("qv")).as("nq"))
-      val spark = prepared.sparkSession
-      import spark.implicits._
-      trainLiteral(vecs, k, iters).toDF("cid", "cv")
-    } else kmeansJoinModel(prepared, k, iters)._2
-
-  /** Per-row argmin over literal centroids: lexicographic least of k
-    * (d2, cid) structs — the same (d2, cid) tiebreak as the join path. */
-  private def argminLiteral(cents: Seq[(Int, Seq[Long])]): Column = {
-    val cands = cents.map { case (cid, cv) =>
-      val nc = cv.map(x => x * x).sum
-      struct(
-        (col("nq") + lit(nc) -
-          lit(2L) * GraftFunctions.dot_long(col("qv"), typedLit(cv))).as("d2"),
-        lit(cid).as("cid"))
-    }
-    if (cands.size == 1) cands.head else least(cands: _*)
+  def kmeansCentroids(prepared: DataFrame, k: Int, iters: Int): DataFrame = {
+    val spark = prepared.sparkSession
+    import spark.implicits._
+    train(prepared, k, iters).toDF("cid", "cv")
   }
 
-  /** The general-k path (IVF at real scale runs k in the tens of
-    * thousands): centroids stay a DataFrame, assignment is a broadcast
-    * join + map-side-combined argmin — per-round shuffle is O(n) id rows,
-    * still never the pair space. */
-  private def kmeansJoin(prepared: DataFrame, k: Int, iters: Int): DataFrame = {
-    val (vecs, centroids) = kmeansJoinModel(prepared, k, iters)
-    assignJoin(vecs, centroids).join(centroids, Seq("cid"))
-      .select(col("cid"), col("cv"), col("id"))
+  /** Nearest centroid per row under the (d2, cid) tiebreak: the L2
+    * kernel's argmin index over the cid-sorted table, mapped back to its
+    * cid through the sorted cid array (index order is cid order, so the
+    * kernel's (d2, index) ties are (d2, cid) ties). */
+  private def nearestCid(qv: Column, cents: Seq[(Int, Seq[Long])]): Column = {
+    val sorted = cents.sortBy(_._1)
+    element_at(typedLit(sorted.map(_._1)),
+      GraftExpr.l2Codes(qv, Seq(sorted.map(_._2))).getItem(0) + 1)
   }
 
-  /** Training loop of the join path; returns (vecs, final centroid frame). */
-  private def kmeansJoinModel(prepared: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
-    val vecs = prepared.select(col("id"), col("qv"),
-      GraftFunctions.dot_long(col("qv"), col("qv")).as("nq"))
-    val cidW = Window.orderBy(col("id"))
-    var centroids = vecs.orderBy(col("id")).limit(k)
-      .withColumn("cid", row_number().over(cidW) - 1)
-      .select(col("cid"), col("qv").as("cv"))
-      .localCheckpoint(true) // k×dim rows; truncates the iterative lineage
-    var it = 0
-    while (it < iters) {
-      val updates = assignJoin(vecs, centroids)
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n"),
-             graft.sketch.VectorAgg.vectorSum(col("qv")).as("vs"))
-        .select(col("cid"),
-          transform(col("vs"),
-            s => floor(s.cast("double") / col("n") + 0.5).cast("long")).as("nv"))
-      centroids = centroids.join(updates, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("nv"), col("cv")).as("cv"))
-        .localCheckpoint(true)
-      it += 1
-    }
-    (vecs, centroids)
-  }
+  /** Collect a (cid, cv) centroid table — a bounded model frame, k rows —
+    * in cid order. */
+  private def collectCentroids(centroids: DataFrame): Seq[(Int, Seq[Long])] =
+    centroids.select(col("cid").cast("int"), col("cv")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — SEMANTIC
     * deduplication: k-means-cluster the embedding space, then within each
@@ -351,47 +300,19 @@ object Ann {
   }
 
   /** Nearest-centroid assignment — the INDEX ADMISSION primitive: route
-    * vectors (id, qv[, nq]) to a FIXED (cid, cv) centroid table without
+    * vectors (id, qv) to a FIXED (cid, cv) centroid table without
     * touching the training corpus. This is the daily-ingest path for an
     * IVF index at scale (the ANN twin of `Dedup.admitIncrement`): the
     * index trains once on the accumulated corpus, each new batch pays
-    * one broadcast of the k×dim table plus a map-side argmin — no
-    * retrain, no shuffle of the stored postings, and assignments of
-    * already-admitted vectors never change. Same deterministic integer
-    * (d2, cid) tiebreak as training. Returns (id, qv, cid).
-    *
-    * When the centroid table is small (≤ [[maxLiteralCentroids]] rows —
-    * one `limit(k+1).collect()` of a KB-scale frame decides), it is
-    * inlined as plan LITERALS and assignment is a map-only codegen
-    * projection: no crossJoin, no groupBy, no shuffle at all. Beyond
-    * that, the broadcast-join + map-side argmin form. */
+    * one collect of the k×dim table (a bounded model frame) plus a
+    * map-side argmin — no retrain, no join, no shuffle of the stored
+    * postings, and assignments of already-admitted vectors never change.
+    * The table rides into the plan as one array literal probed by the L2
+    * kernel, with the same deterministic integer (d2, cid) tiebreak as
+    * training, for any k. Returns (id, qv, cid). */
   def assign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val vecs =
-      if (vectors.columns.contains("nq")) vectors.select(col("id"), col("qv"), col("nq"))
-      else vectors.select(col("id"), col("qv"),
-        GraftFunctions.dot_long(col("qv"), col("qv")).as("nq"))
-    val probe = centroids.select(col("cid").cast("int"), col("cv"))
-      .limit(maxLiteralCentroids + 1).collect()
-    if (probe.length <= maxLiteralCentroids) {
-      val cents = probe.map(r => (r.getInt(0), r.getSeq[Long](1)))
-        .sortBy(_._1).toSeq
-      vecs.withColumn("m", argminLiteral(cents))
-        .select(col("id"), col("qv"), col("m.cid").as("cid"))
-    } else assignJoin(vecs, centroids)
-  }
-
-  /** Join-based assignment (any k): broadcast centroids, map-side-
-    * combined (d2, cid) argmin per id. `vecs` must carry nq. */
-  private def assignJoin(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    val withNc = centroids.select(col("cid"), col("cv"))
-      .withColumn("nc", GraftFunctions.dot_long(col("cv"), col("cv")))
-    val d2 = col("nq") + col("nc") -
-      lit(2L) * GraftFunctions.dot_long(col("qv"), col("cv"))
-    vecs.crossJoin(broadcast(withNc))
-      .select(col("id"), col("qv"), col("cid"), d2.as("d2"))
-      .groupBy(col("id"))
-      .agg(min(struct(col("d2"), col("cid"))).as("m"), first(col("qv")).as("qv"))
-      .select(col("id"), col("qv"), col("m.cid").as("cid"))
+    vectors.select(col("id"), col("qv"),
+      nearestCid(col("qv"), collectCentroids(centroids)).as("cid"))
   }
 
   /** IVF kNN with multi-probe: train the coarse quantizer ([[kmeans]]),
@@ -401,8 +322,8 @@ object Ann {
     * ~ nProbes·n/kClusters per query, never the n² pair space. Posting
     * lists are disjoint (each point lives in one cell), so multi-probe
     * needs no pair dedup. The centroid table is k×dim (KBs) and always
-    * broadcast; the only O(n) stages are the assignment join and the
-    * candidate equi-join on cell id. */
+    * broadcast; the only O(n) stages are the assignment projection and
+    * the candidate equi-join on cell id. */
   def ivfKnn(prepared: DataFrame, kClusters: Int, trainIters: Int,
              k: Int, nProbes: Int, queryFilter: Column): DataFrame = {
     val asg = kmeans(prepared, kClusters, trainIters)
@@ -436,313 +357,128 @@ object Ann {
   // Everything follows the kmeans/v6 determinism discipline (integer
   // d2, (d2, code) tiebreak, integer-rounded centroid updates, fixed
   // iteration count, init from smallest ids) so DuckDB replays training,
-  // encoding, AND the ADC scan bit-for-bit. The numSub per-subspace
-  // k-means instances train TOGETHER: `sp` rides as a key through the
-  // one assignment join and one census groupBy per round, so training
-  // cost does not scale with numSub.
+  // encoding, AND the ADC scan bit-for-bit. A codebook is one
+  // [numSub][ks][subDim] model that the L2 kernel probes per row (the
+  // k-means model is its numSub = 1 case): the numSub per-subspace
+  // k-means instances train TOGETHER in one projection and one census
+  // groupBy per round, so training cost does not scale with numSub, and
+  // every vector's length is checked against numSub·subDim as it passes.
   // -------------------------------------------------------------------
 
-  /** (id, sp, sv): subvector `sp` (0-based) of each prepared vector.
-    * Guard-free by design: the round-8 per-row `when`/`raise_error`
-    * wrapper was re-evaluated inside every one of the numSub slices and
-    * cost the ADC scan 2.3× (round-9 verdict) — the dim contract is now
-    * checked ONCE driver-side at each public entry point
-    * ([[requireDim]]), keeping this hot projection pure codegen. */
-  private def subvectors(prepared: DataFrame, numSub: Int, subDim: Int): DataFrame =
-    prepared.select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(numSub - 1)),
-          sp => slice(col("qv"), sp * lit(subDim) + 1, lit(subDim))))
-      .as(Seq("sp", "sv")))
-
-  /** Driver-side memo of already-dim-checked plans, keyed by
-    * (analyzed-plan semanticHash, expected dim). A PQ chain checks the
-    * SAME prepared frame at every public entry point (train → encode →
-    * search); without the memo each check is a limit-1 Spark job, and
-    * three-plus such jobs per chain cost ~0.3 s of pure fixed overhead
-    * at any data size. Bounded (512 entries, LRU) so a long-lived
-    * session can't grow it; a hash collision could at worst skip a
-    * GUARD (never change a result), which is the accepted trade. */
-  private val dimCheckMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(Int, Int), java.lang.Boolean](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Int), java.lang.Boolean]): Boolean = size() > 512
-    })
-
-  /** One-time driver-side dim check: a vector whose length differs from
-    * numSub·subDim would silently slice short arrays and return wrong
-    * distances (the codegen dot kernel truncates to the shorter input).
-    * One limit-1 row decides (vectors of a prepared frame share one
-    * embedding schema by construction); repeated checks of the same
-    * plan are memo-skipped, so a full train→encode→search chain pays at
-    * most one such job; the hot projections stay guard-free. */
-  private def requireDim(prepared: DataFrame, numSub: Int, subDim: Int): Unit = {
-    val key = (prepared.queryExecution.analyzed.semanticHash(), numSub * subDim)
-    if (!dimCheckMemo.containsKey(key)) {
-      prepared.select(size(col("qv")).as("d")).limit(1).collect().foreach { r =>
-        require(r.getInt(0) == numSub * subDim,
-          s"PQ expects dim ${numSub * subDim} (numSub=$numSub x subDim=$subDim), got ${r.getInt(0)}")
-      }
-      dimCheckMemo.put(key, java.lang.Boolean.TRUE)
-    }
-  }
-
-  /** Mark a plan as dim-checked without a job (used where a training
-    * collect already saw the vectors). */
-  private def memoDim(prepared: DataFrame, dim: Int): Unit =
-    dimCheckMemo.put((prepared.queryExecution.analyzed.semanticHash(), dim),
-      java.lang.Boolean.TRUE)
-
-  /** Above this ks, the per-row argmin / LUT expressions stop being sane
-    * codegen units (ks × dim multiplies per row — the same budget as
-    * [[maxLiteralCentroids]]' k ≤ 64 full-dim argmin) and the broadcast-
-    * join path takes over. */
-  private val maxLiteralCodebook = 64
-
-  /** Collect a trained codebook to the driver: cbArr(sp)(code) =
-    * (centroid, its self-dot). The codebook is a MODEL frame — exactly
-    * numSub·ks rows (KBs) by construction at any corpus size — so this
-    * is the bounded-model collect discipline of the literal k-means
-    * path, and it doubles as the ks-vs-codebook / subDim validation
-    * (round-8 advice) without the separate count() job: a literal-
-    * trained codebook is a LocalRelation, whose collect launches no
-    * tasks at all. */
-  private def collectCodebook(codebook: DataFrame, numSub: Int, subDim: Int,
-                              ks: Int): Array[Array[(Seq[Long], Long)]] = {
+  /** Collect a trained codebook to the driver as the kernel's model,
+    * cb(sp)(code) = centroid; ks = rows / numSub. The codebook is a MODEL
+    * frame — exactly numSub·ks rows (KBs) by construction at any corpus
+    * size — and the collect doubles as its validation (round-8 advice)
+    * without a separate count() job: a trained codebook is a
+    * LocalRelation, whose collect launches no tasks at all. */
+  private def collectCodebook(codebook: DataFrame, numSub: Int,
+                              subDim: Int): Seq[Seq[Seq[Long]]] = {
     val rows = codebook
       .select(col("sp").cast("int"), col("code").cast("int"), col("cv")).collect()
-    codebookFromRows(rows, numSub, subDim, ks)
-  }
-
-  /** Validate + index collected codebook rows as cbArr(sp)(code) =
-    * (centroid, self-dot). */
-  private def codebookFromRows(rows: Array[org.apache.spark.sql.Row], numSub: Int,
-                               subDim: Int, ks: Int): Array[Array[(Seq[Long], Long)]] = {
-    require(rows.length == numSub * ks,
-      s"ks=$ks disagrees with the trained codebook: expected ${numSub * ks} rows, got ${rows.length}")
-    val out = Array.fill[(Seq[Long], Long)](numSub, ks)(null)
+    require(rows.nonEmpty && rows.length % numSub == 0,
+      s"codebook rows (${rows.length}) not a positive multiple of numSub=$numSub")
+    val ks = rows.length / numSub
+    val out = Array.fill[Seq[Long]](numSub, ks)(null)
     rows.foreach { r =>
       val sp = r.getInt(0); val c = r.getInt(1); val cv = r.getSeq[Long](2)
       require(sp >= 0 && sp < numSub && c >= 0 && c < ks,
         s"codebook entry (sp=$sp, code=$c) outside numSub=$numSub x ks=$ks")
       require(cv.length == subDim,
         s"codebook centroid (sp=$sp, code=$c) has dim ${cv.length}, expected subDim=$subDim")
-      out(sp)(c) = (cv, cv.map(x => x * x).sum)
+      out(sp)(c) = cv
     }
     require(out.forall(_.forall(_ != null)),
       "codebook has duplicate or missing (sp, code) entries")
-    out
+    out.map(_.toSeq).toSeq
   }
-
-  /** Literal nearest-code argmin for one subspace: min over ks codes of
-    * (d2, code) — the dot(sv, sv) term is constant across codes, so the
-    * comparison key drops it (same argmin, same ties). Pure codegen:
-    * ks dot products + one least() chain, no join, no shuffle. */
-  private def codeExpr(sv: Column, entries: Array[(Seq[Long], Long)]): Column =
-    if (entries.length == 1) lit(0)
-    else least(entries.zipWithIndex.map { case ((cv, nc), c) =>
-      struct((lit(nc) - lit(2L) * GraftFunctions.dot_long(sv, typedLit(cv))).as("s"),
-             lit(c).as("c"))
-    }.toIndexedSeq: _*).getField("c")
-
-  /** Literal ADC lookup table for one query row: numSub·ks exact
-    * integer d2(query subvector, codebook centroid) entries in slot
-    * order (sp·ks + code) — one map-side projection, replacing the
-    * join-path's subvector explode + broadcast join + collect_list
-    * groupBy (two shuffles of the query set). */
-  private def lutExpr(qv: Column, cbArr: Array[Array[(Seq[Long], Long)]],
-                      numSub: Int, subDim: Int, ks: Int): Column =
-    array((for (sp <- 0 until numSub; c <- 0 until ks) yield {
-      val sv = slice(qv, sp * subDim + 1, subDim)
-      val (cv, nc) = cbArr(sp)(c)
-      GraftFunctions.dot_long(sv, sv) + lit(nc) -
-        lit(2L) * GraftFunctions.dot_long(sv, typedLit(cv))
-    }): _*)
-
-  /** Integer squared L2 between two equal-length long arrays, via the
-    * codegen'd dot kernel: |a−b|² = a·a + b·b − 2 a·b. */
-  private def d2(a: Column, b: Column): Column =
-    GraftFunctions.dot_long(a, a) + GraftFunctions.dot_long(b, b) -
-      lit(2L) * GraftFunctions.dot_long(a, b)
-
-  /** Nearest-code assignment of subvectors against a codebook:
-    * (id, sp, sv) × broadcast (sp, code, cv) → (id, sp, sv, code). */
-  private def pqAssign(sub: DataFrame, codebook: DataFrame): DataFrame =
-    sub.join(broadcast(codebook), Seq("sp"))
-      .select(col("id"), col("sp"), col("sv"), col("code"),
-        d2(col("sv"), col("cv")).as("d2"))
-      .groupBy(col("id"), col("sp"))
-      .agg(min(struct(col("d2"), col("code"))).as("m"), first(col("sv")).as("sv"))
-      .select(col("id"), col("sp"), col("sv"), col("m.code").as("code"))
 
   /** Train the numSub per-subspace codebooks (Lloyd, `iters` fixed
     * rounds each, all subspaces in the same jobs). Returns
     * (sp, code, cv) — numSub·ks rows, KBs at any corpus size; empty
     * codes keep their previous entry (kmeans discipline).
     *
-    * Dispatch mirrors [[kmeans]]: for ks ≤ 64 the codebook lives on the
-    * DRIVER between rounds and each Lloyd round is ONE map-only codegen
-    * projection + one numSub·ks-group aggregation — no assignment join,
-    * no corpus-keyed shuffle, no checkpoint jobs. Both paths compute
-    * bit-identical codebooks (same integer d2, (d2, code) tiebreak,
-    * integer-rounded update, smallest-ids init). */
+    * The codebook lives on the DRIVER between rounds (the bounded-model
+    * discipline of [[kmeans]]), so each Lloyd round is ONE map-only
+    * projection — the kernel's per-subspace argmin codes — plus one
+    * numSub·ks-group census (map-side combined: shuffle volume is the
+    * MODEL size, not the corpus), and the integer-rounded update runs on
+    * the driver. No join, no corpus-keyed shuffle, no checkpoint jobs,
+    * for any ks. The result frame is a LocalRelation: downstream collects
+    * of it ([[collectCodebook]]) launch no tasks. */
   def pqCodebook(prepared: DataFrame, numSub: Int, subDim: Int, ks: Int,
-                 iters: Int): DataFrame =
-    if (ks <= maxLiteralCodebook) pqCodebookLiteral(prepared, numSub, subDim, ks, iters)
-    else pqCodebookJoin(prepared, numSub, subDim, ks, iters)
-
-  /** The ks ≤ 64 trainer: centroids are driver-side literals (the
-    * bounded-model discipline of the literal k-means path). Per round,
-    * the per-sp nearest-code assignment is inlined as a codegen argmin
-    * over literal centroids, the census groupBy carries ≤ numSub·ks
-    * groups (map-side combined — shuffle volume is the MODEL size, not
-    * the corpus), and the integer-rounded update runs on the driver.
-    * The result frame is a LocalRelation: downstream collects of it
-    * ([[collectCodebook]]) launch no tasks. */
-  private def pqCodebookLiteral(prepared: DataFrame, numSub: Int, subDim: Int,
-                                ks: Int, iters: Int): DataFrame = {
+                 iters: Int): DataFrame = {
     val spark = prepared.sparkSession
     val dim = numSub * subDim
     val initRows = prepared.orderBy(col("id")).limit(ks).select(col("qv")).collect()
+      .map(_.getSeq[Long](0))
     require(initRows.length == ks,
       s"PQ training needs at least ks=$ks vectors, got ${initRows.length}")
-    initRows.foreach { r =>
-      require(r.getSeq[Long](0).length == dim,
-        s"PQ expects dim $dim (numSub=$numSub x subDim=$subDim), got ${r.getSeq[Long](0).length}")
+    initRows.foreach { v =>
+      require(v.length == dim,
+        s"PQ expects dim $dim (numSub=$numSub x subDim=$subDim), got ${v.length}")
     }
-    memoDim(prepared, dim) // the init collect just checked the frame
-    var cb: Array[Array[Array[Long]]] = Array.tabulate(numSub, ks) { (sp, c) =>
-      initRows(c).getSeq[Long](0).slice(sp * subDim, (sp + 1) * subDim).toArray
+    var cb: Seq[Seq[Seq[Long]]] = (0 until numSub).map { sp =>
+      initRows.toSeq.map(_.slice(sp * subDim, (sp + 1) * subDim))
     }
     var it = 0
     while (it < iters) {
-      val entries = array((0 until numSub).map { sp =>
-        val sv = slice(col("qv"), sp * subDim + 1, subDim)
-        struct(lit(sp).as("sp"),
-               codeExpr(sv, cb(sp).map(cv => (cv.toSeq, cv.map(x => x * x).sum))).as("code"),
-               sv.as("sv"))
-      }: _*)
-      val census = prepared.select(explode(entries).as("e"))
-        .select(col("e.sp").as("sp"), col("e.code").as("code"), col("e.sv").as("sv"))
+      val census = prepared
+        .select(col("qv"), posexplode(GraftExpr.l2Codes(col("qv"), cb)).as(Seq("sp", "code")))
         .groupBy(col("sp"), col("code"))
-        .agg(count(lit(1)).as("n"), graft.sketch.VectorAgg.vectorSum(col("sv")).as("vs"))
+        .agg(count(lit(1)).as("n"), graft.sketch.VectorAgg.vectorSum(
+          slice(col("qv"), col("sp") * subDim + 1, lit(subDim))).as("vs"))
         .collect()
-      val next = cb.map(_.clone()) // empty codes keep their previous entry
+      val next = cb.map(_.toArray) // empty codes keep their previous entry
       census.foreach { r =>
         val sp = r.getInt(0); val c = r.getInt(1); val n = r.getLong(2)
-        next(sp)(c) = r.getSeq[Long](3)
-          .map(s => math.floor(s.toDouble / n + 0.5).toLong).toArray
+        next(sp)(c) = r.getSeq[Long](3).map(s => math.floor(s.toDouble / n + 0.5).toLong)
       }
-      cb = next
+      cb = next.map(_.toSeq)
       it += 1
     }
     import spark.implicits._
-    (for (sp <- 0 until numSub; c <- 0 until ks) yield (sp, c, cb(sp)(c).toSeq))
+    (for (sp <- 0 until numSub; c <- 0 until ks) yield (sp, c, cb(sp)(c)))
       .toDF("sp", "code", "cv")
-  }
-
-  /** The large-ks trainer (broadcast-join assignment). */
-  private def pqCodebookJoin(prepared: DataFrame, numSub: Int, subDim: Int,
-                             ks: Int, iters: Int): DataFrame = {
-    requireDim(prepared, numSub, subDim)
-    val sub = subvectors(prepared, numSub, subDim)
-    val initW = Window.partitionBy(col("sp")).orderBy(col("id"))
-    var cb = subvectors(prepared.orderBy(col("id")).limit(ks), numSub, subDim)
-      .withColumn("code", row_number().over(initW) - 1)
-      .select(col("sp"), col("code"), col("sv").as("cv"))
-      .localCheckpoint(true)
-    var it = 0
-    while (it < iters) {
-      val updates = pqAssign(sub, cb)
-        .groupBy(col("sp"), col("code"))
-        .agg(count(lit(1)).as("n"),
-             graft.sketch.VectorAgg.vectorSum(col("sv")).as("vs"))
-        .select(col("sp"), col("code"),
-          transform(col("vs"),
-            s => floor(s.cast("double") / col("n") + 0.5).cast("long")).as("nv"))
-      cb = cb.join(updates, Seq("sp", "code"), "left")
-        .select(col("sp"), col("code"), coalesce(col("nv"), col("cv")).as("cv"))
-        .localCheckpoint(true)
-      it += 1
-    }
-    cb
   }
 
   /** Encode the corpus against a trained codebook: (id, codes) with
     * `codes(sp)` the nearest code in subspace sp — the 10¹¹-vector
     * index is THIS table (numSub small ints per row), the float
-    * vectors never need to be touched again.
-    *
-    * For ks ≤ 64 the codebook collapses to literal centroids and the
-    * encode is ONE map-side codegen projection — zero shuffle, zero
-    * join (vs the join path's subvector explode + broadcast join +
-    * two corpus-keyed groupBys). At 100 TB this is the difference
-    * between a scan and a corpus shuffle. */
+    * vectors never need to be touched again. The codebook is collected
+    * (a bounded model frame; ks = rows / numSub) and the encode is ONE
+    * map-side projection of the kernel's argmin codes — zero shuffle,
+    * zero join, for any ks. At 100 TB this is the difference between a
+    * scan and a corpus shuffle. */
   def pqEncode(prepared: DataFrame, codebook: DataFrame, numSub: Int,
-               subDim: Int): DataFrame = {
-    // the codebook is a bounded model frame (numSub·ks rows, KBs by
-    // construction): one collect both decides the path (ks = rows /
-    // numSub) and validates it; LocalRelation codebooks (the literal
-    // trainer's output) collect without launching any tasks
-    val rows = codebook
-      .select(col("sp").cast("int"), col("code").cast("int"), col("cv")).collect()
-    require(rows.nonEmpty && rows.length % numSub == 0,
-      s"codebook rows (${rows.length}) not a positive multiple of numSub=$numSub")
-    val ks = rows.length / numSub
-    requireDim(prepared, numSub, subDim)
-    if (ks <= maxLiteralCodebook) {
-      val cbArr = codebookFromRows(rows, numSub, subDim, ks)
-      val codeCols = (0 until numSub).map { sp =>
-        codeExpr(slice(col("qv"), sp * subDim + 1, subDim), cbArr(sp))
-      }
-      prepared.select(col("id"), array(codeCols: _*).as("codes"))
-    } else {
-      pqAssign(subvectors(prepared, numSub, subDim), codebook)
-        .groupBy(col("id"))
-        .agg(transform(array_sort(collect_list(struct(col("sp"), col("code")))),
-          s => s.getField("code")).as("codes"))
-    }
-  }
+               subDim: Int): DataFrame =
+    prepared.select(col("id"),
+      GraftExpr.l2Codes(col("qv"), collectCodebook(codebook, numSub, subDim)).as("codes"))
+
+  /** ADC distance of a (codes, lut) row: the sum of numSub lookup-table
+    * entries, slot sp·ks + codes(sp). */
+  private def adcDist(numSub: Int, ks: Int): Column =
+    aggregate(sequence(lit(0), lit(numSub - 1)), lit(0L),
+      (acc, sp) => acc +
+        element_at(col("lut"), sp * ks + element_at(col("codes"), sp + 1) + 1))
 
   /** ADC top-k: for each query, distance to EVERY encoded vector is the
     * sum of numSub lookup-table entries — no per-pair vector math. The
-    * LUT (query × numSub·ks integer distances, KBs per query) and the
-    * query set are broadcast; the scan over the codes table is
-    * map-side; the ONLY shuffle is the per-query top-k window. Returns
-    * (qid, rk, nid, adist). */
+    * LUT (numSub·ks integer distances per query, KBs) is the kernel's d2
+    * table over the collected codebook — one map-side projection of the
+    * query set, for any ks — and is broadcast with the queries; the scan
+    * over the codes table is map-side; the ONLY shuffle is the per-query
+    * top-k window. Returns (qid, rk, nid, adist). */
   def pqAdcTopK(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
                 numSub: Int, subDim: Int, ks: Int, k: Int): DataFrame = {
     // a trained codebook holds exactly numSub·ks rows (empty codes keep
     // their entry), so a caller-supplied ks that disagrees with the
-    // codebook would mis-index the LUT silently. Checked ONCE driver-side
-    // by the codebook collect (a KB-scale model frame; LocalRelation
-    // codebooks collect without a job); the round-8 per-row
-    // `when`/`raise_error` form of this check sat on the ADC hot loop
-    // and cost 2.3× (round-9 verdict).
-    requireDim(queries, numSub, subDim)
-    val lut =
-      if (ks <= maxLiteralCodebook) {
-        // literal LUT: one map-side projection over the query set
-        val cbArr = collectCodebook(codebook, numSub, subDim, ks)
-        queries.select(col("id").as("qid"),
-          lutExpr(col("qv"), cbArr, numSub, subDim, ks).as("lut"))
-      } else {
-        val cbRows = codebook.count()
-        require(cbRows == numSub.toLong * ks,
-          s"ks=$ks disagrees with the trained codebook: expected ${numSub * ks} rows, got $cbRows")
-        subvectors(queries, numSub, subDim)
-          .join(broadcast(codebook), Seq("sp"))
-          .select(col("id").as("qid"), (col("sp") * ks + col("code")).as("slot"),
-            d2(col("sv"), col("cv")).as("pd"))
-          .groupBy(col("qid"))
-          .agg(transform(array_sort(collect_list(struct(col("slot"), col("pd")))),
-            s => s.getField("pd")).as("lut"))
-      }
-    val adist = aggregate(
-      sequence(lit(0), lit(numSub - 1)), lit(0L),
-      (acc, sp) => acc +
-        element_at(col("lut"), sp * ks + element_at(col("codes"), sp + 1) + 1))
+    // codebook would mis-index the LUT silently
+    val cb = collectCodebook(codebook, numSub, subDim)
+    require(cb.head.length == ks,
+      s"ks=$ks disagrees with the trained codebook: expected ${numSub * ks} rows, got ${numSub * cb.head.length}")
+    val lut = queries.select(col("id").as("qid"), GraftExpr.l2Table(col("qv"), cb).as("lut"))
     val pairs = codes.join(broadcast(lut), col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("nid"), adist.as("adist"))
+      .select(col("qid"), col("id").as("nid"), adcDist(numSub, ks).as("adist"))
     val w = Window.partitionBy(col("qid")).orderBy(col("adist"), col("nid"))
     pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("qid"), col("rk"), col("nid"), col("adist"))
@@ -758,14 +494,14 @@ object Ann {
     * scan with a posting-bounded one: candidates ~ nProbes·n/kCells per
     * query instead of n.
     *
-    * Plan shape at scale: coarse training/assignment is [[kmeans]]'s
-    * map-only literal path (small kCells) or broadcast-join path;
+    * Plan shape at scale: coarse training and assignment are the
+    * map-only kernel projections of [[kmeans]] and [[assign]];
     * the residual is a BROADCAST join on cid (k-row table — never an
     * id-keyed self-join of the corpus); PQ training sees only residuals;
     * postings carry cid INSIDE the pqEncode group key (a struct id), so
     * no corpus-wide join reunites codes with cells; the LUT table
-    * (queries × probes × numSub·ks integers) and the probe list are
-    * broadcast, the ADC scan is map-side, and the per-query top-k window
+    * (queries × probes × numSub·ks integers, the kernel's d2 table over
+    * the collected codebook) and the probe list are broadcast, the ADC scan is map-side, and the per-query top-k window
     * is the only shuffle — exactly [[pqAdcTopK]]'s contract with the
     * scan bounded by the probe set. Every point lives in one cell, so
     * multi-probe needs no pair dedup.
@@ -811,28 +547,12 @@ object Ann {
         zip_with(col("qv"), col("cv"), (a, b) => a - b).as("qv"))
     // per-(query, probed cell) LUT over the query residual vs the
     // residual codebook — numSub·ks integers each, KBs total, broadcast;
-    // small ks inlines the codebook as literals (one map-side projection,
-    // no subvector explode / join / groupBy over the probe set)
-    val lut =
-      if (ks <= maxLiteralCodebook) {
-        val cbArr = collectCodebook(cb, numSub, subDim, ks)
-        qprobes.select(col("id.id").as("qid"), col("id.cid").as("pcid"),
-          lutExpr(col("qv"), cbArr, numSub, subDim, ks).as("lut"))
-      } else subvectors(qprobes, numSub, subDim)
-        .join(broadcast(cb), Seq("sp"))
-        .select(col("id"), (col("sp") * ks + col("code")).as("slot"),
-          d2(col("sv"), col("cv")).as("pd"))
-        .groupBy(col("id"))
-        .agg(transform(array_sort(collect_list(struct(col("slot"), col("pd")))),
-          s => s.getField("pd")).as("lut"))
-        .select(col("id.id").as("qid"), col("id.cid").as("pcid"), col("lut"))
-    val adist = aggregate(
-      sequence(lit(0), lit(numSub - 1)), lit(0L),
-      (acc, sp) => acc +
-        element_at(col("lut"), sp * ks + element_at(col("codes"), sp + 1) + 1))
+    // one map-side projection over the probe set
+    val lut = qprobes.select(col("id.id").as("qid"), col("id.cid").as("pcid"),
+      GraftExpr.l2Table(col("qv"), collectCodebook(cb, numSub, subDim)).as("lut"))
     val pairs = postings.join(broadcast(lut),
         col("cid") === col("pcid") && col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("nid"), adist.as("adist"))
+      .select(col("qid"), col("id").as("nid"), adcDist(numSub, ks).as("adist"))
     val w = Window.partitionBy(col("qid")).orderBy(col("adist"), col("nid"))
     pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("qid"), col("rk"), col("nid"), col("adist"))
@@ -886,8 +606,8 @@ object Ann {
 
   /** Encode to byte codes: code_d = ⌊(x−mn_d)·255 / (mx_d−mn_d)⌋,
     * clamped to [0, 255] (out-of-grid queries saturate), 0 on constant
-    * dims. The grid is collected to literal arrays (dim rows — the
-    * model-sized centroid-literal pattern), so encoding is ONE map-side
+    * dims. The grid is collected to two array literals (dim rows — the
+    * model-as-data pattern of [[kmeans]]), so encoding is ONE map-side
     * projection: two zip_with passes, no join, no shuffle. The division
     * subtracts `pmod` first, making the numerator an exact multiple —
     * pure integer arithmetic. Returns (id, codes, ncode). */
@@ -903,8 +623,8 @@ object Ann {
 
   private def sqEncodeWith(prepared: DataFrame,
                            grid: Array[(Int, Long, Long)]): DataFrame = {
-    val mnArr = array(grid.map(g => lit(g._2)): _*)
-    val spanArr = array(grid.map(g => lit(g._3 - g._2)): _*)
+    val mnArr = typedLit(grid.map(_._2).toSeq)
+    val spanArr = typedLit(grid.map(g => g._3 - g._2).toSeq)
     val shifted = zip_with(col("qv"), mnArr, (x, mn) => greatest(lit(0L), x - mn))
     val codes = zip_with(shifted, spanArr, (y, s) =>
       when(s === 0L, lit(0L)).otherwise(
@@ -939,8 +659,8 @@ object Ann {
     * a [[rerankExact]] stage — SQ8's 256 levels/dim typically doesn't
     * (see RecallSpec).
     *
-    * Plan shape at scale: coarse training + assignment is [[kmeans]]'s
-    * map-only literal path; the grid is a dim-row census collected to
+    * Plan shape at scale: coarse training + assignment are map-only
+    * kernel projections ([[kmeans]], [[assign]]); the grid is a dim-row census collected to
     * plan literals, so ENCODING IS A PURE MAP-SIDE PROJECTION — unlike
     * ivfPq there is no residual join at all (the global grid is
     * cell-independent). Query codes are probe-independent for the same
@@ -1054,8 +774,8 @@ object Ann {
     * centroid). Cell-balance skew decides task granularity at serve
     * time (a hot cell is a hot partition) and inertia drift is the
     * re-train trigger — both from ONE map-side pass over the corpus
-    * (assignment is the literal-centroid codegen argmin for small k,
-    * the broadcast argmin beyond) ending in a kCells-row aggregate;
+    * (assignment is [[assign]]'s kernel argmin over the centroid
+    * literal, for any k) ending in a kCells-row aggregate;
     * the shuffle carries the MODEL-sized census, never the corpus.
     * Deterministic integer arithmetic end-to-end (query `v20`). */
   def indexStats(prepared: DataFrame, centroids: DataFrame): DataFrame = {
@@ -1106,12 +826,12 @@ object Ann {
     * Plan shape at 100 TB — every stage before the join is map-only:
     * the coarse centroids and SQ grid are bounded models (k·dim /
     * dim·2 rows) trained on the corpus side; corpus rows assign + encode
-    * in one projection ([[assign]]'s literal path, [[sqEncode]]);
-    * query rows route to their nProbes nearest cells via a literal
-    * centroid argsort expression (NO crossJoin, NO window — the
-    * routing that [[ivfSq]] does with a window over queries×kCells
-    * rows collapses to a per-row array_sort of kCells literal structs)
-    * and encode in the same projection. The single shuffle pair is the
+    * in one projection ([[assign]]'s kernel argmin, [[sqEncode]]);
+    * query rows route to their nProbes nearest cells by sorting the
+    * kernel's kCells-entry d2 table zipped with the cids (NO crossJoin,
+    * NO window — the routing that [[ivfSq]] does with a window over
+    * queries×kCells rows collapses to a per-row array_sort of kCells
+    * (d2, cid) structs) and encode in the same projection. The single shuffle pair is the
     * equi-join on cell id — a SHUFFLED join, not a broadcast: pair
     * volume is the IVF candidate count (|queries|·nProbes·|corpus|/
     * kCells), task granularity is one cell, so kCells must be sized
@@ -1133,33 +853,15 @@ object Ann {
         grid)
       .select(col("id.id").as("nid"), col("id.cid").as("cid"),
         col("codes"), col("ncode"))
-    val routed =
-      if (kCells <= maxLiteralCentroids) {
-        // literal probe routing: array_sort of kCells (score, cid)
-        // structs, score = nc − 2·q·c (the rank of d2 with the per-row
-        // constant |q|² dropped — same order, same (d2, cid) ties)
-        val centArr = cents.select(col("cid").cast("int"), col("cv")).collect()
-          .map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1)
-        val entries = centArr.map { case (cid, cv) =>
-          val nc = cv.map(x => x * x).sum
-          struct((lit(nc) - lit(2L) * GraftFunctions.dot_long(col("qv"), typedLit(cv))).as("s"),
-                 lit(cid).as("c"))
-        }
-        queries.select(col("id"), col("qv"),
-            explode(slice(array_sort(array(entries.toIndexedSeq: _*)), 1, nProbes)).as("p"))
-          .select(struct(col("id"), col("p.c").as("cid")).as("id"), col("qv"))
-      } else {
-        // large-kCells fallback: model broadcast + per-query window
-        val withNc = cents.withColumn("nc", GraftFunctions.dot_long(col("cv"), col("cv")))
-        val nq = GraftFunctions.dot_long(col("qv"), col("qv"))
-        val d2qc = col("nq") + col("nc") -
-          lit(2L) * GraftFunctions.dot_long(col("qv"), col("cv"))
-        val pw = Window.partitionBy(col("id")).orderBy(col("d2"), col("cid"))
-        queries.withColumn("nq", nq).crossJoin(broadcast(withNc))
-          .select(col("id"), col("qv"), col("cid"), d2qc.as("d2"))
-          .withColumn("pr", row_number().over(pw)).filter(col("pr") <= nProbes)
-          .select(struct(col("id"), col("cid")).as("id"), col("qv"))
-      }
+    // probe routing: the nProbes least (d2, cid) structs of the kernel's
+    // d2 table zipped with the cid-sorted cids
+    val centArr = collectCentroids(cents)
+    val probes = arrays_zip(
+      GraftExpr.l2Table(col("qv"), Seq(centArr.map(_._2))).as("d2"),
+      typedLit(centArr.map(_._1)).as("cid"))
+    val routed = queries.select(col("id"), col("qv"),
+        explode(slice(array_sort(probes), 1, nProbes)).as("p"))
+      .select(struct(col("id"), col("p.cid").as("cid")).as("id"), col("qv"))
     val qside = sqEncodeWith(routed, grid)
       .select(col("id.id").as("qid"), col("id.cid").as("qcid"),
         col("codes").as("qcodes"), col("ncode").as("qn"))

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -49,6 +49,125 @@ case class DotLong(left: Expression, right: Expression)
        """.stripMargin
     })
 
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** A trained ANN model of shape [numSub][k][subDim], flattened: row c
+  * of subspace sp starts at (sp·k + c)·subDim. k-means is numSub = 1;
+  * a PQ codebook has one k-row table per subspace, and subvector sp of
+  * a vector is its components [sp·subDim, (sp+1)·subDim). Distances are
+  * exact integer squared L2. */
+final class L2Model(val numSub: Int, val k: Int, val subDim: Int, rows: Array[Long])
+    extends Serializable {
+
+  private def vector(q: ArrayData): Array[Long] = {
+    val n = q.numElements()
+    if (n != numSub * subDim) throw new IllegalArgumentException(
+      s"L2 model expects vectors of length ${numSub * subDim} " +
+        s"(numSub=$numSub x subDim=$subDim), got $n")
+    q.toLongArray()
+  }
+
+  private def d2(v: Array[Long], sp: Int, c: Int): Long = {
+    val off = sp * subDim; val base = (sp * k + c) * subDim
+    var s = 0L; var j = 0
+    while (j < subDim) { val d = v(off + j) - rows(base + j); s += d * d; j += 1 }
+    s
+  }
+
+  /** Per subspace, the index of the nearest row, ties to the smaller index. */
+  def codes(q: ArrayData): ArrayData = {
+    val v = vector(q)
+    val out = new Array[Int](numSub)
+    var sp = 0
+    while (sp < numSub) {
+      var best = d2(v, sp, 0); var c = 1
+      while (c < k) {
+        val d = d2(v, sp, c)
+        if (d < best) { best = d; out(sp) = c }
+        c += 1
+      }
+      sp += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Every d2 in slot order: slot sp·k + c. */
+  def table(q: ArrayData): ArrayData = {
+    val v = vector(q)
+    val out = new Array[Long](numSub * k)
+    var sp = 0
+    while (sp < numSub) {
+      var c = 0
+      while (c < k) { out(sp * k + c) = d2(v, sp, c); c += 1 }
+      sp += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+object L2Model {
+  val dataType: DataType = ArrayType(ArrayType(ArrayType(LongType)))
+
+  /** Flatten a model value; every subspace must hold k ≥ 1 rows of one
+    * length. */
+  def apply(model: ArrayData): L2Model = {
+    val subs = (0 until model.numElements()).map(model.getArray)
+    val k = if (subs.isEmpty) 0 else subs.head.numElements()
+    require(subs.nonEmpty && k > 0 && subs.forall(_.numElements() == k),
+      s"L2 model needs numSub >= 1 subspaces of one k >= 1 rows each, got ${subs.map(_.numElements())}")
+    val rows = subs.flatMap(s => (0 until k).map(c => s.getArray(c).toLongArray()))
+    val subDim = rows.head.length
+    require(rows.forall(_.length == subDim),
+      s"L2 model rows differ in length: ${rows.map(_.length).distinct.sorted}")
+    new L2Model(subs.length, k, subDim, rows.toArray.flatten)
+  }
+
+  /** The model as one plan literal, its shape checked on the driver. */
+  def literal(model: Seq[Seq[Seq[Long]]]): Expression = {
+    val l = org.apache.spark.sql.catalyst.expressions.Literal.create(model, dataType)
+    apply(l.value.asInstanceOf[ArrayData])
+    l
+  }
+}
+
+/** Exact integer squared L2 from a BIGINT vector (left) to every row of
+  * an [[L2Model]] literal (right). The model is data, not code: the
+  * generated code calls the kernel through a reference to this
+  * expression, so a new model — every Lloyd round, every dataset —
+  * reuses the compiled class. A vector whose length is not numSub·subDim
+  * fails the task. */
+abstract class ModelL2 extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), L2Model.dataType)
+
+  @transient lazy val model: L2Model = L2Model(right.eval().asInstanceOf[ArrayData])
+
+  def kernel(q: ArrayData): ArrayData
+
+  override def nullSafeEval(q: Any, m: Any): Any = kernel(q.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("l2", this)
+    nullSafeCodeGen(ctx, ev, (q, _) => s"${ev.value} = $self.kernel($q);")
+  }
+}
+
+/** Per-subspace argmin codes: array<int> of numSub row indices under the
+  * (d2, index) tiebreak. */
+case class L2Codes(left: Expression, right: Expression) extends ModelL2 {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "l2_codes"
+  override def kernel(q: ArrayData): ArrayData = model.codes(q)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** The full d2 table: array<bigint> of numSub·k distances, slot sp·k + c. */
+case class L2Table(left: Expression, right: Expression) extends ModelL2 {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "l2_table"
+  override def kernel(q: ArrayData): ArrayData = model.table(q)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -856,6 +975,12 @@ object GraftExpr {
   }
 
   def dotLong(a: Column, b: Column): Column = col(DotLong(ex(a), ex(b)))
+  /** Nearest row per subspace of an [numSub][k][subDim] model ([[L2Codes]]). */
+  def l2Codes(qv: Column, model: Seq[Seq[Seq[Long]]]): Column =
+    col(L2Codes(ex(qv), L2Model.literal(model)))
+  /** Every d2 to an [numSub][k][subDim] model, slot sp·k + c ([[L2Table]]). */
+  def l2Table(qv: Column, model: Seq[Seq[Seq[Long]]]): Column =
+    col(L2Table(ex(qv), L2Model.literal(model)))
   def ngramHashes(text: Column, n: Int, sortedDistinct: Boolean): Column =
     col(NgramHash(ex(text), n, sortedDistinct))
   def chargramHashes(text: Column, n: Int, sortedDistinct: Boolean): Column =

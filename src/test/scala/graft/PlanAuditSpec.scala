@@ -100,14 +100,17 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("v6 kmeans: assignment is a map-only projection — no join, no cartesian") {
-    val p = plan("v6_kmeans_ivf")
-    // small-k assignment inlines the centroid table as plan literals, so
-    // the n x k argmin is a codegen projection: the plan must contain NO
-    // join operator at all on the assignment path and never a cartesian
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"literal path should not need the centroid join:\n$p")
+    // the centroid table rides in the plan as one array literal and the
+    // n x k argmin is one kernel projection, at k = 8 (v6) and k = 80
+    // alike: the plan must contain NO join operator at all on the
+    // assignment path and never a cartesian
+    val prepared = graft.ann.Ann.prepare(
+      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
+    val k80 = graft.ann.Ann.kmeans(prepared, 80, 1).queryExecution.executedPlan.toString
+    for (p <- Seq(plan("v6_kmeans_ivf"), k80)) {
+      assert(!p.contains("CartesianProduct"), p)
+      assert(!p.contains("Join"), s"assignment should not need a centroid join:\n$p")
+    }
   }
 
   test("ivfKnn: candidates come from an equi-join on cell id, never all-pairs") {
