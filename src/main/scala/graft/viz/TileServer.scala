@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, Executors}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Dataset
 import graft.core.RasterSpec
-import graft.ops.{Reproject, Resampling}
+import graft.ops.Reproject
 import graft.scan.Tile
 
 /** Live XYZ tile service — the serving-layer counterpart of the
@@ -15,9 +15,11 @@ import graft.scan.Tile
   * neighbor prefetch (the viewport-diff scheduler, `show.py:242-257`,
   * reduced to its useful core: warm the cache around each request).
   *
-  * Rendering one tile = filter + warp + collect of a 256² slice — a small
-  * Spark job; concurrent tiles ride Spark's scheduler. This is driver-side
-  * serving logic, not a query operator (SURVEY §2.9).
+  * Rendering one tile = [[Reproject.window]]: the driver maps the 256²
+  * tile's pixels to source pixels once for every band, and one narrow
+  * Spark job (no shuffle) returns the hits from the routed source chunks;
+  * concurrent tiles ride Spark's scheduler. This is driver-side serving
+  * logic, not a query operator (SURVEY §2.9).
   *
   * `bands` empty renders the dataset as one plane through `cmap`;
   * 2-3 band names render a true-color composite (the reference's headline
@@ -98,23 +100,12 @@ final class TileServer(
 
   private def renderFresh(z: Int, x: Int, y: Int): Array[Byte] = {
     missCtr.incrementAndGet()
-    val dstSpec = Xyz.tileSpec(z, x, y)
-    // ONE warp job covers every band: Reproject groups by (item, asset,
-    // dst chunk), so a 3-band composite costs one Spark job per tile,
-    // not one per channel; the collected tiles split by band here.
-    val warped = Reproject(cached, spec, dstSpec, srcChunk, 256, Resampling.Nearest)
-      .collect()
-    def plane(ts: Array[Tile]): Array[Double] = {
-      val p = Array.fill(256 * 256)(Double.NaN)
-      ts.foreach { t =>
-        var r = 0
-        while (r < t.height) {
-          System.arraycopy(t.pixels, r * t.width, p, (t.rowOff + r) * 256 + t.colOff, t.width)
-          r += 1
-        }
-      }
-      p
-    }
+    // ONE job covers every band: the window returns one full 256² plane
+    // per (item, asset) with a valid pixel, split by band here; of several
+    // (item, asset)s in one band the last one is drawn
+    val warped = Reproject.window(cached, spec, Xyz.tileSpec(z, x, y), srcChunk)
+    def plane(ts: Array[Tile]): Array[Double] =
+      ts.lastOption.fold(Array.fill(256 * 256)(Double.NaN))(_.pixels)
     // 1-band -> colormap; 2-3 bands -> RGB compose (reference
     // `show.py:452-475`: cmap only for single-band, 1-3 bands
     // rendered as channels, one shared display range for all bands).

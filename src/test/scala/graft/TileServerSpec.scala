@@ -1,10 +1,13 @@
 package graft
 
-import graft.core.{AffineTransform, Bounds}
-import graft.ops.Mosaic
+import org.apache.spark.sql.Dataset
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
+import graft.core.{AffineTransform, Bounds, Proj, RasterSpec}
+import graft.ops.{Mosaic, Reproject, Resampling}
 import graft.scan.{Tile, TileScan}
-import graft.stac.{Prepare, StacAsset, StacItem}
-import graft.viz.{TileServer, Xyz}
+import graft.stac.{Prepare, PrepareResult, StacAsset, StacItem}
+import graft.viz.{Png, TileServer, Xyz}
 
 /** End-to-end serving test: composite -> HTTP GET /{z}/{x}/{y}.png. */
 class TileServerSpec extends SparkSpec {
@@ -230,5 +233,155 @@ class TileServerSpec extends SparkSpec {
           s"band-order swap should mirror R/B at ($r,$c)")
       }
     } finally { rgb.stop(); bgr.stop() }
+  }
+
+  // --- one-window render: Reproject.window against the distributed warp
+
+  private val winChunk = 64
+  /** Two 256² UTM items, the second 100 px east and south of the first:
+    * a 356² grid of 6 × 6 chunks, NaN where neither item lies. */
+  private def twoItems(bands: Seq[String]): PrepareResult = Prepare((0 until 2).map { i =>
+    val (x0, y1) = (399960.0 + 1000 * i, 4992760.0 - 1000 * i)
+    StacItem(s"w$i", Some(f"2024-06-0${i + 1}T00:00:00Z"), epsg = Some(32633),
+      assets = bands.map(b => b -> StacAsset(s"fake://$b/$i",
+        bbox = Some(Bounds(x0, y1 - 2560, x0 + 2560, y1)), shape = Some((256, 256)),
+        transform = Some(AffineTransform.northUp(x0, y1, 10, 10)))).toMap)
+  })
+
+  /** The per-band composite `Stack.serve` builds (assetIdx = band order),
+    * spread over 4 partitions. */
+  private def composite(plan: PrepareResult): Dataset[Tile] = {
+    import spark.implicits._
+    val idx = plan.assetTable.map(_.band).distinct.sorted.zipWithIndex.toMap
+    Mosaic(TileScan.scan(spark, plan.assetTable, plan.spec, winChunk), winChunk)
+      .map(c => Tile(0, idx(c.band), c.band, 0L, c.yChunk, c.xChunk, 0, 0,
+        c.height, c.width, c.pixels))
+      .repartition(4)
+  }
+
+  /** Tile (z, x, y) holding source pixel (row, col) of `spec`. */
+  private def tileAt(spec: RasterSpec, z: Int, row: Int, col: Int): (Int, Int, Int) = {
+    val (wx, wy) = spec.transform(col.toDouble, row.toDouble)
+    val (lon, lat) = Proj.transform(spec.epsg, 4326, wx, wy)
+    val (x, y) = Xyz.tileOf(lon, lat, z)
+    (z, x, y)
+  }
+
+  /** Per (item, asset, band), the 256² plane of a warp's tiles as raw bits. */
+  private def planeBits(ts: Array[Tile]): Map[(Int, Int, String), Seq[Long]] =
+    ts.groupBy(t => (t.itemIdx, t.assetIdx, t.band)).map { case (k, g) =>
+      val p = Array.fill(256 * 256)(Double.NaN)
+      for (t <- g; r <- 0 until t.height; c <- 0 until t.width)
+        p((t.yChunk * 256 + t.rowOff + r) * 256 + t.xChunk * 256 + t.colOff + c) =
+          t.pixels(r * t.width + c)
+      k -> p.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    }
+
+  /** The tiles a render must cover: below, at and above the natural zoom,
+    * across a source chunk corner, partly off the data. */
+  private def renderTiles(spec: RasterSpec): Seq[(Int, Int, Int)] = {
+    val nat = Xyz.naturalZoom(spec.xres)
+    val (h, w) = spec.shape
+    Seq(tileAt(spec, nat - 2, h / 2, w / 2), tileAt(spec, nat, h / 2, w / 2),
+      tileAt(spec, nat + 2, 2 * winChunk, 2 * winChunk),
+      tileAt(spec, nat + 1, 3 * winChunk, 2 * winChunk), tileAt(spec, nat, 0, 0),
+      tileAt(spec, nat + 1, h - 1, w - 1))
+  }
+
+  test("Reproject.window equals the distributed Nearest warp bit for bit") {
+    val plan = twoItems(Seq("red", "grn", "nir"))
+    val comp = composite(plan).cache()
+    assert(comp.rdd.getNumPartitions >= 4)
+    val scan = TileScan.scan(spark, plan.assetTable.filter(_.band == "red"), plan.spec, winChunk)
+    def check(tiles: Dataset[Tile], z: Int, x: Int, y: Int): Map[(Int, Int, String), Seq[Long]] = {
+      val dst = Xyz.tileSpec(z, x, y)
+      val win = Reproject.window(tiles, plan.spec, dst, winChunk)
+      assert(win.forall(t => t.height == 256 && t.width == 256 && t.yChunk == 0 && t.xChunk == 0))
+      val want = planeBits(Reproject(tiles, plan.spec, dst, winChunk, 256, Resampling.Nearest).collect())
+      val got = planeBits(win)
+      assert(got.keySet == want.keySet, s"$z/$x/$y")
+      want.foreach { case (k, bits) =>
+        val differ = bits.indices.count(i => got(k)(i) != bits(i))
+        assert(differ == 0, s"$z/$x/$y $k: $differ pixels differ")
+      }
+      got
+    }
+    try {
+      val tiles = renderTiles(plan.spec)
+      val keys = tiles.map { case (z, x, y) => check(comp, z, x, y).keySet }
+      assert(keys.forall(_.size == 3), keys) // every band, every tile
+      // fully off the data: nothing routed, nothing returned
+      val (z, x, y) = tiles(1)
+      assert(check(comp, z, x + 40, y).isEmpty)
+      assert(Reproject.window(comp, plan.spec, Xyz.tileSpec(z, x + 40, y), winChunk).isEmpty)
+      // a plain scan: two items, partial tiles at chunk offsets
+      val items = tiles.map { case (z, x, y) => check(scan, z, x, y).keySet.map(_._1) }
+      assert(items.exists(_ == Set(0, 1)), items)
+    } finally comp.unpersist()
+  }
+
+  /** The render before [[Reproject.window]]: the distributed Nearest warp,
+    * overlaid per band, normalized and encoded. */
+  private def reprojectPng(tiles: Dataset[Tile], spec: RasterSpec, bands: Seq[String],
+                           range: (Double, Double), z: Int, x: Int, y: Int): Array[Byte] = {
+    val warped = Reproject(tiles, spec, Xyz.tileSpec(z, x, y), winChunk, 256,
+      Resampling.Nearest).collect()
+    def plane(ts: Array[Tile]): Array[Double] = {
+      val p = Array.fill(256 * 256)(Double.NaN)
+      for (t <- ts; r <- 0 until t.height)
+        System.arraycopy(t.pixels, r * t.width, p, (t.rowOff + r) * 256 + t.colOff, t.width)
+      p
+    }
+    val planes = if (bands.isEmpty) Seq(plane(warped)) else bands.map(b => plane(warped.filter(_.band == b)))
+    Png.encode(planes.map(_.map(Png.normalize(_, range._1, range._2))), 256, 256)
+  }
+
+  test("1-band and RGB servers render the PNG bytes of the Reproject path") {
+    import spark.implicits._
+    val plan = twoItems(Seq("red", "grn", "nir"))
+    val rgbComp = composite(plan)
+    val grayComp = rgbComp.filter(_.band == "grn").map(_.copy(assetIdx = 0))
+    val gray = new TileServer(grayComp, plan.spec, winChunk) // range auto = 2-98 percentile
+    val rgb = new TileServer(rgbComp, plan.spec, winChunk, range = Some((0.0, 128.0)),
+      bands = Seq("nir", "red", "grn"))
+    try {
+      val tiles = renderTiles(plan.spec)
+      val (z, x, y) = tiles(1)
+      for ((z, x, y) <- tiles :+ ((z, x + 40, y))) {
+        assert(gray.renderTile(z, x, y).sameElements(
+          reprojectPng(grayComp, plan.spec, Seq.empty, gray.displayRange, z, x, y)), s"gray $z/$x/$y")
+        assert(rgb.renderTile(z, x, y).sameElements(
+          reprojectPng(rgbComp, plan.spec, Seq("nir", "red", "grn"), (0.0, 128.0), z, x, y)),
+          s"rgb $z/$x/$y")
+      }
+    } finally { gray.stop(); rgb.stop() }
+  }
+
+  test("a render miss on a warm server is one Spark job with no shuffle") {
+    val plan = twoItems(Seq("red", "grn", "nir"))
+    val server = new TileServer(composite(plan), plan.spec, winChunk,
+      range = Some((0.0, 128.0)), bands = Seq("red", "grn", "nir"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      // a stage whose output is still cached is skipped, never submitted
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    val sc = spark.sparkContext
+    try {
+      val Seq(warm, miss) = renderTiles(plan.spec).take(2)
+      server.renderTile(warm._1, warm._2, warm._3) // materializes the cached composite
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      server.renderTile(miss._1, miss._2, miss._3)
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      assert(server.stats.misses == 2)
+      // one job whose only stage is its result stage: no shuffle map stage
+      assert((jobs.get, stages.get, shuffleBytes.get) == ((1, 1, 0L)))
+    } finally { sc.removeSparkListener(listener); server.stop() }
   }
 }
